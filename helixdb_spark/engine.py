@@ -32,7 +32,8 @@ bucket by rewriting that bucket only — SURVEY.md §7.2 late-data stance) that
 commits write-new-then-flip (never mutates live data in place, safe on
 object stores); ``outdate`` drops whole partition directories without
 reading them. Nothing ever collects data to the driver except the
-user-requested point value.
+user-requested point values (every stored version of each probed pair, so
+the driver can pick the last-write-wins winner).
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from dataclasses import dataclass
 from typing import Iterable, Iterator, Optional, Sequence
 
 from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -107,6 +109,31 @@ def _apply_state_delta(state: dict, d: dict) -> None:
     state.update(d.get("set") or {})
     for k in d.get("del") or []:
         state.pop(k, None)
+
+
+def _binary_sql(b: bytes) -> str:
+    """A binary SQL literal. Probe sets reach the plan as one parsed SQL
+    expression rather than one py4j call per literal."""
+    return f"X'{b.hex()}'"
+
+
+def _last_write_wins(df: DataFrame) -> DataFrame:
+    """One row per (ts, key): the highest (seq, time_bucket, value) — the
+    newest put wins (overwrite semantics, reference src/file/rick.rs:
+    403-417), and ties inside one put break deterministically on value
+    bytes. A hash aggregation rather than a row_number window: map-side
+    partial combine, no per-group sort."""
+    return (
+        df.groupBy("ts", "key")
+        .agg(F.max(F.struct("seq", "time_bucket", "value")).alias("_w"))
+        .select(
+            "ts",
+            "key",
+            F.col("_w.value").alias("value"),
+            F.col("_w.seq").alias("seq"),
+            F.col("_w.time_bucket").alias("time_bucket"),
+        )
+    )
 
 
 @dataclass
@@ -539,13 +566,21 @@ class HelixSpark:
             n.startswith("time_bucket=") for n in os.listdir(path)
         )
 
+    def _read_tier(self, path: str, schema: T.StructType) -> Optional[DataFrame]:
+        try:
+            return self.spark.read.schema(schema).parquet(path)
+        except AnalysisException as e:
+            # a concurrent outdate/vacuum removed the tier after the caller
+            # saw it; every other read failure (a corrupt or conflicting
+            # layout) must surface, not read as an empty tier
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+
     def _hot_df(self) -> Optional[DataFrame]:
         if not self._has_data(self.layout.hot_path):
             return None
-        try:
-            return self.spark.read.schema(HOT_SCHEMA).parquet(self.layout.hot_path)
-        except Exception:
-            return None
+        return self._read_tier(self.layout.hot_path, HOT_SCHEMA)
 
     def _cold_df(self) -> Optional[DataFrame]:
         """Live cold rows per the committed manifest. The ``gen`` partition
@@ -556,9 +591,8 @@ class HelixSpark:
         manifest: dict = self._state.get("cold_manifest") or {}
         if not manifest:
             return None
-        try:
-            df = self.spark.read.schema(COLD_GEN_SCHEMA).parquet(self.layout.cold_path)
-        except Exception:
+        df = self._read_tier(self.layout.cold_path, COLD_GEN_SCHEMA)
+        if df is None:
             return None
         by_gen: dict[int, list[int]] = {}
         for bucket, gen in manifest.items():
@@ -627,67 +661,17 @@ class HelixSpark:
         in-memory columnar table instead of re-scanning parquet and
         re-running the dedup aggregate."""
         if self._entries_cache is None:
-            self._entries_cache = self._entries_df_raw().persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+            self._entries_cache = _last_write_wins(
+                self._prune(self._stored_df())
+            ).persist(StorageLevel.MEMORY_AND_DISK)
         return self._entries_cache
 
-    def _entries_df(
-        self,
-        ts_lo: Optional[int] = None,
-        ts_hi: Optional[int] = None,
-        pre_filter=None,
-        probe_df: Optional[DataFrame] = None,
-    ) -> DataFrame:
-        """Logical entry view with the read predicates applied. With
-        ``cache_reads`` on, predicates filter the persisted deduped view
-        instead — equivalent placement, because every predicate here is a
-        function of (ts, key) and the dedup groups by exactly (ts, key), so
-        filtering above or below the aggregate keeps the same groups."""
-        if self.options.cache_reads:
-            df = self._cached_entries()
-            if ts_lo is not None:
-                df = df.where(F.col("ts") >= ts_lo)
-            if ts_hi is not None:
-                df = df.where(F.col("ts") <= ts_hi)
-            cutoff = self._state.get("outdate_cutoff")
-            if cutoff is not None:
-                df = df.where(F.col("ts") > int(cutoff))
-            if pre_filter is not None:
-                df = df.where(pre_filter)
-            if probe_df is not None:
-                df = df.join(
-                    F.broadcast(probe_df),
-                    (F.col("ts") == F.col("p_ts")) & (F.col("key") == F.col("p_key")),
-                    "left_semi",
-                )
-            return df
-        return self._entries_df_raw(ts_lo, ts_hi, pre_filter, probe_df)
-
-    def _entries_df_raw(
-        self,
-        ts_lo: Optional[int] = None,
-        ts_hi: Optional[int] = None,
-        pre_filter=None,
-        probe_df: Optional[DataFrame] = None,
-    ) -> DataFrame:
-        """Union hot + cold as logical entries with last-write-wins dedup on
-        (ts, key) (overwrite semantics — reference src/file/rick.rs:403-417).
-
-        Bucket predicates derived from the ts range reach the parquet scan as
-        partition filters (this is the reference's level pruning,
-        level_info.rs:98-111, done by Catalyst instead of by hand). Unlike
-        the reference — whose scan misses keys that live only in compacted
-        levels (SURVEY.md §3.3) — this view sees all levels; the survey calls
-        that strictly-more-correct and we keep it.
-
-        ``pre_filter`` (a key/ts predicate Column) and ``probe_df`` (exact
-        (p_ts, p_key) probes, broadcast-semi-joined) apply BELOW the dedup
-        window: the dedup groups by (ts, key), so dropping whole groups
-        early is equivalent — and the window shuffle then carries only the
-        selected rows instead of every entry in the ts range (at scale, the
-        difference between shuffling kilobytes and shuffling the table).
-        """
+    def _stored_df(self) -> DataFrame:
+        """Every stored version: hot ∪ decoded cold rows as
+        ``(ts, key, value, seq, time_bucket)``, before the last-write-wins
+        dedup. Unlike the reference — whose scan misses keys that live only
+        in compacted levels (SURVEY.md §3.3) — this view sees all levels;
+        the survey calls that strictly-more-correct and we keep it."""
         parts = []
         hot = self._hot_df()
         if hot is not None:
@@ -700,7 +684,19 @@ class HelixSpark:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        return df
 
+    def _prune(
+        self,
+        df: DataFrame,
+        ts_lo: Optional[int] = None,
+        ts_hi: Optional[int] = None,
+        buckets: Optional[Sequence[int]] = None,
+    ) -> DataFrame:
+        """Apply the ts range and the outdate cutoff. Bucket predicates
+        derived from the range (or the exact ``buckets``) reach the parquet
+        scan as partition filters — the reference's level pruning,
+        level_info.rs:98-111, done by Catalyst instead of by hand."""
         if ts_lo is not None:
             df = df.where(
                 (F.col("time_bucket") >= self.layout.bucket_of(ts_lo))
@@ -711,81 +707,99 @@ class HelixSpark:
                 (F.col("time_bucket") <= self.layout.bucket_of(ts_hi))
                 & (F.col("ts") <= ts_hi)
             )
+        if buckets is not None:
+            df = df.where(F.col("time_bucket").isin(list(buckets)))
         cutoff = self._state.get("outdate_cutoff")
         if cutoff is not None:
             df = df.where(F.col("ts") > int(cutoff))
+        return df
+
+    def _entries_df(
+        self,
+        ts_lo: Optional[int] = None,
+        ts_hi: Optional[int] = None,
+        pre_filter=None,
+    ) -> DataFrame:
+        """Logical entry view: last-write-wins dedup on (ts, key) (overwrite
+        semantics — reference src/file/rick.rs:403-417) with the read
+        predicates applied. ``pre_filter`` (a key/ts predicate Column)
+        applies BELOW the dedup: it groups by (ts, key), so dropping whole
+        groups early is equivalent, and the dedup shuffle then carries only
+        the selected rows instead of every entry in the ts range. With
+        ``cache_reads`` on, predicates filter the persisted deduped view
+        instead — equivalent placement for the same reason."""
+        if self.options.cache_reads:
+            df = self._prune(self._cached_entries(), ts_lo, ts_hi)
+        else:
+            df = self._prune(self._stored_df(), ts_lo, ts_hi)
         if pre_filter is not None:
             df = df.where(pre_filter)
-        if probe_df is not None:
-            df = df.join(
-                F.broadcast(probe_df),
-                (F.col("ts") == F.col("p_ts")) & (F.col("key") == F.col("p_key")),
-                "left_semi",
-            )
+        return df if self.options.cache_reads else _last_write_wins(df)
 
-        # last-write-wins as a hash aggregation (max over (seq, value) struct)
-        # instead of a row_number window: aggregates get map-side partial
-        # combine and skip the per-group sort — same winner (highest seq; the
-        # window's tie order within one put batch was arbitrary, struct-max
-        # makes it deterministic on value bytes).
-        return (
-            df.groupBy("ts", "key")
-            .agg(F.max(F.struct("seq", "time_bucket", "value")).alias("_w"))
-            .select(
-                "ts",
-                "key",
-                F.col("_w.value").alias("value"),
-                F.col("_w.seq").alias("seq"),
-                F.col("_w.time_bucket").alias("time_bucket"),
-            )
+    def _probe_candidates(
+        self,
+        keys: Iterable[bytes],
+        ts_lo: Optional[int],
+        ts_hi: int,
+        buckets: Optional[Sequence[int]] = None,
+    ) -> DataFrame:
+        """The point reads' shared candidate path: stored versions of
+        ``keys`` (the cached deduped view with ``cache_reads`` on) pruned
+        by bucket, ts and outdate cutoff, with the key set as a literal IN
+        that reaches the parquet scan. No exchange — the callers resolve
+        last-write-wins themselves."""
+        src = self._cached_entries() if self.options.cache_reads else self._stored_df()
+        return self._prune(src, ts_lo, ts_hi, buckets).where(
+            F.expr(f"key IN ({', '.join(map(_binary_sql, sorted(keys)))})")
         )
+
+    def _point_df(self, pairs: set[tuple[int, bytes]]) -> DataFrame:
+        """Every stored version of exactly the ``(ts, key)`` pairs: the
+        candidate path narrowed by a literal ``(ts, key)`` IN set, which
+        Catalyst turns into one hash-set probe per row."""
+        ts_set = {t for t, _ in pairs}
+        exact = F.expr(
+            "(ts, key) IN ("
+            + ", ".join(f"({t}L, {_binary_sql(k)})" for t, k in sorted(pairs))
+            + ")"
+        )
+        return (
+            self._probe_candidates(
+                {k for _, k in pairs},
+                min(ts_set),
+                max(ts_set),
+                sorted({self.layout.bucket_of(t) for t in ts_set}),
+            )
+            .where(exact)
+            .select("ts", "key", "value", "seq", "time_bucket")
+        )
+
+    def _live_probes(
+        self, probes: Iterable[tuple[int, bytes]]
+    ) -> set[tuple[int, bytes]]:
+        """Distinct probes above the outdate cutoff: outdated timestamps
+        answer None without a read (level_info.rs:98-111 ``None`` branch)."""
+        cutoff = self._state.get("outdate_cutoff")
+        return {
+            (int(t), bytes(k))
+            for t, k in probes
+            if cutoff is None or int(t) > cutoff
+        }
 
     def get(self, ts: int, key: bytes) -> Optional[bytes]:
         """Point lookup (reference src/db.rs:53-55, level routing
-        level.rs:123-134). Outdated timestamps return None
-        (level_info.rs:98-111 ``None`` branch). The plan prunes to a single
-        time_bucket partition, then parquet key min/max stats skip row groups
-        — the SSTable index's job (src/file/sstable.rs), for free."""
-        self._check_open()
-        cutoff = self._state.get("outdate_cutoff")
-        if cutoff is not None and ts <= cutoff:
-            return None
-        row = (
-            self._entries_df(
-                ts_lo=ts, ts_hi=ts, pre_filter=F.col("key") == F.lit(bytes(key))
-            )
-            .select("value")
-            .first()
-        )
-        return bytes(row[0]) if row is not None else None
+        level.rs:123-134): :meth:`get_many` with one probe, one job."""
+        return self.get_many([(ts, key)]).get((int(ts), bytes(key)))
 
     def get_asof(self, ts: int, key: bytes) -> Optional[tuple[int, bytes]]:
         """Latest entry for ``key`` at or before ``ts`` — the as-of read a
         time-series store needs but the reference lacks: its
         compressed-chunk probe is exact-match only (binary_search ``.ok()``
         at src/level.rs:503-505 returns None on a miss instead of the
-        previous value; SURVEY.md §2.3). Returns ``(found_ts, value)``.
-
-        The plan prunes every time_bucket partition ABOVE ts's bucket, pushes
-        the key equality + ts upper bound to parquet, and takes the max-ts
-        row; retention still applies (an as-of read never resurrects
-        outdated data)."""
-        self._check_open()
-        cutoff = self._state.get("outdate_cutoff")
-        ts_lo = (cutoff + 1) if cutoff is not None else None
-        if ts_lo is not None and ts < ts_lo:
-            return None
-        row = (
-            self._entries_df(
-                ts_lo=ts_lo,
-                ts_hi=ts,
-                pre_filter=F.col("key") == F.lit(bytes(key)),
-            )
-            .orderBy(F.col("ts").desc())
-            .select("ts", "value")
-            .first()
-        )
-        return (row[0], bytes(row[1])) if row is not None else None
+        previous value; SURVEY.md §2.3). Returns ``(found_ts, value)``;
+        :meth:`get_many_asof` with one probe, two jobs. Retention still
+        applies (an as-of read never resurrects outdated data)."""
+        return self.get_many_asof([(ts, key)]).get((int(ts), bytes(key)))
 
     def get_raw(self, ts: int, key: bytes) -> Optional[tuple[str, bytes]]:
         """Point lookup WITHOUT running the decompress UDCF — the
@@ -826,7 +840,7 @@ class HelixSpark:
                     & (F.col("ts") == ts)
                     & (F.col("key") == F.lit(key_b))
                 )
-                # same LWW winner as _entries_df_raw's struct-max
+                # same LWW winner as _last_write_wins's struct-max
                 .agg(F.max(F.struct("seq", "value")).alias("_w"))
                 .select("_w")
                 .first()
@@ -960,84 +974,80 @@ class HelixSpark:
         """Batched point lookups — one job for N probes (the reference
         coalesces batched rick reads the same way, src/file/rick.rs:116-154).
         This is the shape benchmarks should use: per-get job launch is
-        Spark's latency floor, amortized here."""
+        Spark's latency floor, amortized here. Probes at or below the
+        outdate cutoff and probes with no entry are absent from the result.
+
+        The plan prunes to the probes' time_bucket partitions, then parquet
+        key min/max stats and bloom filters skip row groups — the SSTable
+        index's job (src/file/sstable.rs), for free. It collects every
+        stored version of the exact probe pairs (at most probes × versions
+        per pair) and the driver picks the last-write-wins winner: the
+        dedup aggregate's max-(seq, time_bucket, value) order, where
+        Python ``bytes`` compare unsigned like Spark binary."""
         self._check_open()
-        if not probes:
+        pairs = self._live_probes(probes)
+        if not pairs:
             return {}
-        probe_df = self.spark.createDataFrame(
-            [(int(t), bytes(k)) for t, k in probes],
-            T.StructType(
-                [
-                    T.StructField("p_ts", T.LongType(), False),
-                    T.StructField("p_key", T.BinaryType(), False),
-                ]
-            ),
-        )
-        lo = min(t for t, _ in probes)
-        hi = max(t for t, _ in probes)
-        hits = (
-            self._entries_df(ts_lo=lo, ts_hi=hi, probe_df=probe_df)
-            .select("ts", "key", "value")
-            .collect()
-        )
-        return {(r["ts"], bytes(r["key"])): bytes(r["value"]) for r in hits}
+        best: dict[tuple[int, bytes], tuple[int, int, bytes]] = {}
+        for r in self._point_df(pairs).collect():
+            pair = (r["ts"], bytes(r["key"]))
+            w = (r["seq"], r["time_bucket"], bytes(r["value"]))
+            if pair not in best or w > best[pair]:
+                best[pair] = w
+        return {pair: w[2] for pair, w in best.items()}
 
     def get_many_asof(
         self, probes: Sequence[tuple[int, bytes]]
     ) -> dict[tuple[int, bytes], tuple[int, bytes]]:
-        """Batched as-of lookups — one job for N probes (the batched form
-        of :meth:`get_asof`, same shape argument as :meth:`get_many`: per-
-        probe job launch is Spark's latency floor). Returns
-        ``{(probe_ts, key): (found_ts, value)}``; probes with no entry at
-        or before their ts are absent from the result. The N-at-a-time
-        as-of is the read pattern a feature-store / point-in-time-join
-        client actually issues; the reference cannot express even the
-        scalar form (its chunk probe is exact-match only,
+        """Batched as-of lookups — two jobs for N probes (one shuffle; the
+        batched form of :meth:`get_asof`, same shape argument as
+        :meth:`get_many`: per-probe job launch is Spark's latency floor).
+        Returns ``{(probe_ts, key): (found_ts, value)}``; probes with no
+        entry at or before their ts are absent from the result. The
+        N-at-a-time as-of is the read pattern a feature-store /
+        point-in-time-join client actually issues; the reference cannot
+        express even the scalar form (its chunk probe is exact-match only,
         src/level.rs:503-505 — SURVEY.md §2.3). The heavy-N form of this
         is the asof_join operator (operators/asof.py, graded as
         kv_asof_probes); this wrapper keeps the dict-returning engine API
-        shape for bounded probe sets."""
+        shape for bounded probe sets.
+
+        Each candidate row fans out to its key's probe timestamps through
+        a literal key → probe-ts map, and one per-probe
+        max-(ts, seq, time_bucket, value) aggregate picks the newest ts and,
+        within it, the last-write-wins version — the dedup folded into the
+        as-of aggregate."""
         self._check_open()
-        if not probes:
+        pairs = self._live_probes(probes)
+        if not pairs:
             return {}
-        probe_df = self.spark.createDataFrame(
-            [(int(t), bytes(k)) for t, k in probes],
-            T.StructType(
-                [
-                    T.StructField("p_ts", T.LongType(), False),
-                    T.StructField("p_key", T.BinaryType(), False),
-                ]
-            ),
-        )
-        hi = max(t for t, _ in probes)
-        cutoff = self._state.get("outdate_cutoff")
-        ts_lo = (cutoff + 1) if cutoff is not None else None
-        # keys first (semi-join prunes the shuffle), then every surviving
-        # entry joins the broadcast probes on key with ts <= p_ts and the
-        # max-(ts, value) struct per probe wins — no window, map-side
-        # combinable, exactly get_asof's answer per probe
-        ent = self._entries_df(
-            ts_lo=ts_lo,
-            ts_hi=hi,
-            probe_df=None,
-            pre_filter=None,
-        ).join(
-            F.broadcast(probe_df.select("p_key").distinct()),
-            F.col("key") == F.col("p_key"),
-            "left_semi",
-        )
-        hits = (
-            ent.join(
-                F.broadcast(probe_df),
-                (F.col("key") == F.col("p_key")) & (F.col("ts") <= F.col("p_ts")),
+        by_key: dict[bytes, list[int]] = {}
+        for t, k in sorted(pairs):
+            by_key.setdefault(k, []).append(t)
+        probe_ts = F.expr(
+            "map("
+            + ", ".join(
+                f"{_binary_sql(k)}, array({', '.join(f'{t}L' for t in ts)})"
+                for k, ts in by_key.items()
             )
-            .groupBy("p_ts", "p_key")
-            .agg(F.max(F.struct("ts", "value")).alias("_w"))
-            .select("p_ts", "p_key", "_w.ts", "_w.value")
+            + ")"
+        )
+        cutoff = self._state.get("outdate_cutoff")
+        hits = (
+            self._probe_candidates(
+                by_key,
+                int(cutoff) + 1 if cutoff is not None else None,
+                max(t for t, _ in pairs),
+            )
+            .select("*", F.explode(probe_ts[F.col("key")]).alias("p_ts"))
+            .where(F.col("ts") <= F.col("p_ts"))
+            .groupBy("p_ts", "key")
+            .agg(F.max(F.struct("ts", "seq", "time_bucket", "value")).alias("_w"))
+            .select("p_ts", "key", "_w.ts", "_w.value")
             .collect()
         )
         return {
-            (r["p_ts"], bytes(r["p_key"])): (r["ts"], bytes(r["value"]))
+            (r["p_ts"], bytes(r["key"])): (r["ts"], bytes(r["value"]))
             for r in hits
         }
 

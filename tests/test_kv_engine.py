@@ -10,6 +10,7 @@
 
 from __future__ import annotations
 
+import itertools
 import struct
 
 import pytest
@@ -773,3 +774,159 @@ def test_commit_diff_classifies_all_three(spark, db_path):
     # nothing else: untouched identities never appear
     assert len(rows) == 2 + n_deleted
     db.close()
+
+
+# ------------------------------------------------ one-job point reads
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_of(spark, fn):
+    """(result, Spark jobs ``fn`` launched), counted by job group."""
+    sc = spark.sparkContext
+    group = f"point_read_{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "point-read job count")
+    try:
+        out = fn()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(jobs)
+
+
+def _lww_model(puts, cutoff):
+    """Brute-force last write wins over the put history: a later put beats
+    an earlier one, ties inside one put go to the larger value bytes, and
+    retention hides every ts at or below ``cutoff``."""
+    won: dict = {}
+    for seq, rows in enumerate(puts):
+        for ts, key, value in rows:
+            cand = (seq, value)
+            if (ts, key) not in won or cand > won[(ts, key)]:
+                won[(ts, key)] = cand
+    return {p: w[1] for p, w in won.items() if p[0] > cutoff}
+
+
+@pytest.mark.parametrize("cache_reads", [False, True])
+def test_point_reads_job_counts_and_answers(spark, db_path, cache_reads):
+    """get_many and get run one job, get_many_asof two (one shuffle), with
+    and without the read cache, and every answer matches a brute-force
+    last-write-wins model: hot late overwrites over cold chunks, blob
+    (ts_delta_xor) and native chunks, duplicate probes, probes at and
+    below the outdate cutoff."""
+    from helixdb_spark.codecs import ARRAY_CODEC, CodecRegistry
+
+    reg = CodecRegistry()
+    # x-keys hold 8-byte values, the only shape ts_delta_xor accepts
+    reg.register_dispatch(lambda k: "ts_delta_xor" if k[:1] == b"x" else ARRAY_CODEC)
+    db = HelixSpark.open(
+        spark,
+        db_path,
+        HelixOptions(
+            rick_range=10, outdate_range=1 << 30, auto_maintain=False,
+            cache_reads=cache_reads,
+        ),
+        codecs=reg,
+    )
+    keys = [b"xa", b"xb", b"ka", b"kb"]
+
+    def val(key, ts, tag):
+        v = struct.pack("<d", ts + 0.5 * tag)
+        return v if key[:1] == b"x" else v + b"-native"
+
+    puts = [
+        [(t, k, val(k, t, 0)) for t in range(0, 50, 2) for k in keys],
+        # late overwrites into soon-to-be-cold buckets, plus new hot rows
+        [(t, k, val(k, t, 1)) for t in (14, 22, 36) for k in (b"xa", b"ka")]
+        + [(t, k, val(k, t, 1)) for t in (51, 53) for k in keys],
+        # a second overwrite of one pair, and a same-put duplicate
+        [(22, b"xa", val(b"xa", 22, 2)), (36, b"kb", val(b"kb", 36, 3)),
+         (36, b"kb", val(b"kb", 36, 2))],
+    ]
+    db.put(puts[0])
+    db.compact(0, 39)  # buckets 0-3 cold, 4 hot
+    db.put(puts[1])
+    db.put(puts[2])
+    db.outdate(12)  # bucket 0 retires whole, ts 10-12 are filtered
+    model = _lww_model(puts, 12)
+
+    probes = (
+        [(t, k) for t in (5, 12, 14, 22, 36, 44, 51, 52) for k in keys]
+        + [(22, b"xa"), (36, b"kb"), (14, b"zz")]  # duplicates, a miss
+    )
+    if cache_reads:
+        db.get(22, b"xa")  # builds the cached view once, off the count
+    got, jobs = _jobs_of(spark, lambda: db.get_many(probes))
+    assert jobs == 1
+    assert got == {p: model[p] for p in probes if p in model}
+
+    scalar, jobs = _jobs_of(spark, lambda: db.get(22, b"xa"))
+    assert jobs == 1
+    assert scalar == model[(22, b"xa")] == val(b"xa", 22, 2)
+    assert db.get(12, b"ka") is None and db.get(14, b"zz") is None
+
+    asof_probes = probes + [(13, b"xa"), (100, b"kb"), (49, b"ka")]
+    got_asof, jobs = _jobs_of(spark, lambda: db.get_many_asof(asof_probes))
+    assert jobs == 2
+    want_asof = {}
+    for p_ts, key in asof_probes:
+        hits = [t for (t, k) in model if k == key and t <= p_ts]
+        if hits:
+            want_asof[(p_ts, key)] = (max(hits), model[(max(hits), key)])
+    assert got_asof == want_asof
+    assert db.get_asof(37, b"kb") == (36, model[(36, b"kb")])
+    assert db.get_asof(12, b"ka") is None
+    db.close()
+
+
+def test_tie_break_parity_across_reads(spark, db_path):
+    """Two writes of one (ts, key) inside one put share a seq; every read
+    path breaks the tie on unsigned value bytes (0x80 beats 0x7f), and a
+    later put beats both whatever its bytes."""
+    db = HelixSpark.open(
+        spark, db_path, HelixOptions(rick_range=10, auto_maintain=False)
+    )
+    lo, hi = b"\x7f" + b"z" * 7, b"\x80" + b"a" * 7
+    db.put([(3, b"k", lo), (3, b"k", hi), (4, b"k", hi), (4, b"k", lo)])
+    db.put([(4, b"k", b"\x00later")])
+
+    def answers():
+        scanned = {
+            r["ts"]: bytes(r["value"]) for r in db.scan((0, 9)).collect()
+        }
+        many = db.get_many([(3, b"k"), (4, b"k")])
+        return (
+            (db.get(3, b"k"), many[(3, b"k")], scanned[3]),
+            (db.get(4, b"k"), many[(4, b"k")], scanned[4]),
+        )
+
+    assert answers() == ((hi,) * 3, (b"\x00later",) * 3)
+    db.compact(0, 9)  # the cold chunk keeps the same winners
+    assert answers() == ((hi,) * 3, (b"\x00later",) * 3)
+    db.close()
+
+
+def test_failing_tier_read_raises(spark, db_path, tmp_path):
+    """A tier whose read fails (here: a stray nested partition directory)
+    must raise, not read as an empty tier that silently answers None."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.errors import PySparkException
+
+    from helixdb_spark.layout import HOT_SCHEMA
+
+    db = HelixSpark.open(
+        spark, db_path, HelixOptions(rick_range=10, auto_maintain=False)
+    )
+    db.put([(t, b"k", b"v%d" % t) for t in range(20)])
+    assert db.get(3, b"k") == b"v3"
+    stray = f"{db.layout.hot_path}/time_bucket=5/extra=1"
+    os.makedirs(stray)
+    shutil.copy(glob.glob(f"{db.layout.hot_path}/time_bucket=0/*.parquet")[0], stray)
+    with pytest.raises(PySparkException, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        db.get(3, b"k")
+    with pytest.raises(PySparkException, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+        db.scan((0, 19)).count()
+    # only a tier that vanished after the listing reads as absent
+    assert db._read_tier(str(tmp_path / "gone"), HOT_SCHEMA) is None

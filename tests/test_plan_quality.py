@@ -50,9 +50,10 @@ def test_scan_prunes_time_bucket_partitions(kv_db):
 
 
 def test_get_plan_prunes_and_pushes_key(kv_db):
-    df = kv_db._entries_df(ts_lo=120, ts_hi=120).where(F.col("key") == F.lit(b"k1"))
-    plan = plan_of(df)
+    # the plan get / get_many collect: one probe (ts 120 -> bucket 1)
+    plan = plan_of(kv_db._point_df({(120, b"k1")}))
     assert "PartitionFilters" in plan
+    assert "time_bucket" in plan.split("PartitionFilters", 1)[1][:300]
     pushed = plan.split("PushedFilters", 1)[1][:200]
     assert "key" in pushed  # key equality reaches the parquet scan
 
