@@ -20,8 +20,10 @@ LevelInfo              partition-pruned reads + a tiny JSON state file that
                        reference's fdatasync'd LEVEL_INFO superblock,
                        level_info.rs:98-111)
 MemIndex (index.rs)    not needed — parquet footers survive restart (S8)
-k-way merge            ``orderBy`` (sort shuffle); toLocalIterator preserves
-(iterator.rs:111-195)  order for streamed consumption
+k-way merge            ``orderBy``: in the dedup's one post-shuffle partition
+(iterator.rs:111-195)  when the scanned buckets fit it, else a range-
+                       partitioned sort; toLocalIterator preserves order
+                       for streamed consumption
 ====================  =========================================================
 
 Scale posture (100 TB): every job here touches only the partitions named by
@@ -38,6 +40,7 @@ the driver can pick the last-write-wins winner).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -582,13 +585,15 @@ class HelixSpark:
             return None
         return self._read_tier(self.layout.hot_path, HOT_SCHEMA)
 
-    def _cold_df(self) -> Optional[DataFrame]:
-        """Live cold rows per the committed manifest. The ``gen`` partition
-        column is filtered to exactly the (gen, bucket) pairs the manifest
-        references, so uncommitted staging generations (a crashed compact)
-        and superseded-but-not-yet-GC'd generations are pruned at planning
+    def _cold_df(self, manifest: Optional[dict] = None) -> Optional[DataFrame]:
+        """Live cold rows per the committed manifest (or the given
+        historical ``manifest``). The ``gen`` partition column is filtered
+        to exactly the (gen, bucket) pairs the manifest references, so
+        uncommitted staging generations (a crashed compact) and
+        superseded-but-not-yet-GC'd generations are pruned at planning
         time — their files are never opened."""
-        manifest: dict = self._state.get("cold_manifest") or {}
+        if manifest is None:
+            manifest = self._state.get("cold_manifest") or {}
         if not manifest:
             return None
         df = self._read_tier(self.layout.cold_path, COLD_GEN_SCHEMA)
@@ -666,25 +671,22 @@ class HelixSpark:
             ).persist(StorageLevel.MEMORY_AND_DISK)
         return self._entries_cache
 
-    def _stored_df(self) -> DataFrame:
-        """Every stored version: hot ∪ decoded cold rows as
+    def _stored_df(
+        self, manifest: Optional[dict] = None, extra_hot: Sequence[DataFrame] = ()
+    ) -> DataFrame:
+        """Every stored version: hot (plus ``extra_hot`` tiers) ∪ decoded
+        cold rows (per ``manifest``, default the live one) as
         ``(ts, key, value, seq, time_bucket)``, before the last-write-wins
         dedup. Unlike the reference — whose scan misses keys that live only
         in compacted levels (SURVEY.md §3.3) — this view sees all levels;
         the survey calls that strictly-more-correct and we keep it."""
-        parts = []
-        hot = self._hot_df()
-        if hot is not None:
-            parts.append(hot)
-        cold = self._cold_df()
+        parts = [p for p in (self._hot_df(), *extra_hot) if p is not None]
+        cold = self._cold_df(manifest)
         if cold is not None:
             parts.append(self._decode_cold(cold))
         if not parts:
             return self.spark.createDataFrame([], HOT_SCHEMA)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _prune(
         self,
@@ -1072,11 +1074,16 @@ class HelixSpark:
 
         The reference implements scan as a key-ordered loop of point gets per
         shard plus a k-way heap merge on the client (iterator.rs:111-195);
-        here it is one declarative plan — filter (pushed to parquet) + global
-        sort (range-partitioned shuffle) — which scales out instead of
-        serializing through one consumer. Use ``.toLocalIterator()`` for the
-        streamed, backpressured consumption the reference's bounded channels
-        provide (option.rs:150-153).
+        here it is one declarative plan — filter (pushed to parquet), the
+        last-write-wins dedup, then a global sort. When the bucket dirs the
+        scan touches hold at most ``advisoryPartitionSizeInBytes`` (the size
+        AQE coalesces the dedup's output to anyway), the dedup's output is
+        coalesced to one partition and sorted there: ordered scan and
+        ``count()`` take 2 jobs each (1 from a built read cache). Larger
+        scans keep a range-partitioned sort shuffle (4 and 3 jobs), which
+        scales out instead of serializing through one task. Use
+        ``.toLocalIterator()`` for the streamed, backpressured consumption
+        the reference's bounded channels provide (option.rs:150-153).
         """
         self._check_open()
         ts_lo, ts_hi = time_range
@@ -1091,9 +1098,41 @@ class HelixSpark:
             )
         df = self._entries_df(ts_lo=ts_lo, ts_hi=ts_hi, pre_filter=key_pred)
         df = df.select("ts", "key", "value")
+        if self._fits_one_partition(ts_lo, ts_hi):
+            # after the dedup exchange, so scan and decode keep their
+            # parallelism; one partition satisfies the sort's and count()'s
+            # distributions, so neither adds an exchange
+            df = df.coalesce(1)
         if comparator is not None:
             df = df.orderBy(comparator(F.col("key")), F.col("ts"))
         return df
+
+    def _fits_one_partition(self, ts_lo: int, ts_hi: int) -> bool:
+        """Whether the bucket dirs a ``[ts_lo, ts_hi]`` scan reads (hot
+        ``time_bucket=b`` plus the manifest's cold ``gen=g/time_bucket=b``)
+        hold at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+        the size AQE coalesces the dedup's post-shuffle partitions to.
+        Listing stops once the running total passes it, so a large scan
+        costs about one directory listing."""
+        limit = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        b_lo, b_hi = self.layout.bucket_of(ts_lo), self.layout.bucket_of(ts_hi)
+        dirs = [
+            f"{self.layout.hot_path}/time_bucket={b}"
+            for b in self._fs.list_buckets(self.layout.hot_path)
+            if b_lo <= b <= b_hi
+        ] + [
+            f"{self.layout.cold_gen_path(int(g))}/time_bucket={b}"
+            for b, g in (self._state.get("cold_manifest") or {}).items()
+            if b_lo <= int(b) <= b_hi
+        ]
+        total = 0
+        for d in dirs:
+            total += sum(self._fs.file_sizes(d).values())
+            if total > limit:
+                return False
+        return True
 
     def scan_asof_commit(
         self,
@@ -1142,46 +1181,13 @@ class HelixSpark:
                 )
         target = tail[0]
         seq_cut = target.get("seq_at_commit")
-        manifest = {
-            str(b): int(g)
-            for b, g in (target.get("manifest_before") or {}).items()
-        }
-
-        parts = []
-        hot = self._hot_df()
-        if hot is not None:
-            parts.append(hot)
-        for e in tail:  # hot partitions the rewound commits parked
-            trash = self.layout.trash_path(int(e["gen"]))
-            if self._fs.list_buckets(trash):
-                try:
-                    parts.append(
-                        self.spark.read.schema(HOT_SCHEMA).parquet(trash)
-                    )
-                except Exception:
-                    pass
-        if manifest:
-            try:
-                cold = self.spark.read.schema(COLD_GEN_SCHEMA).parquet(
-                    self.layout.cold_path
-                )
-                by_gen: dict[int, list[int]] = {}
-                for bucket, gen in manifest.items():
-                    by_gen.setdefault(int(gen), []).append(int(bucket))
-                pred = None
-                for gen, buckets in by_gen.items():
-                    p = (F.col("gen") == gen) & F.col("time_bucket").isin(buckets)
-                    pred = p if pred is None else (pred | p)
-                parts.append(self._decode_cold(cold.where(pred).drop("gen")))
-            except Exception:
-                pass
-        if not parts:
-            return self.spark.createDataFrame([], HOT_SCHEMA).select(
-                "ts", "key", "value"
-            )
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        # hot partitions the rewound commits parked in trash/
+        parked = [
+            self._read_tier(t, HOT_SCHEMA)
+            for t in (self.layout.trash_path(int(e["gen"])) for e in tail)
+            if self._fs.list_buckets(t)
+        ]
+        df = self._stored_df(target.get("manifest_before") or {}, parked)
         if seq_cut is not None:
             # cold rows carry seq=-1 and always pass — their generations are
             # manifest_before-listed, i.e. staged before the snapshot commit
@@ -1201,11 +1207,7 @@ class HelixSpark:
                 (kexpr >= comparator(F.lit(bytes(lo))))
                 & (kexpr <= comparator(F.lit(bytes(hi))))
             )
-        df = (
-            df.groupBy("ts", "key")
-            .agg(F.max(F.struct("seq", "value")).alias("_w"))
-            .select("ts", "key", F.col("_w.value").alias("value"))
-        )
+        df = _last_write_wins(df).select("ts", "key", "value")
         if comparator is not None:
             df = df.orderBy(comparator(F.col("key")), F.col("ts"))
         return df
@@ -1221,10 +1223,13 @@ class HelixSpark:
         at most one partition (plus one prefetched) on the driver — the
         reference's pull-based iterator with a bounded prefetch buffer
         (``ScanOption.prefetch_buf_size``, src/option.rs:150-153, consumed
-        at db.rs:215). The global sort in :meth:`scan` range-partitions the
-        shuffle output, so partition-by-partition consumption preserves the
-        (comparator(key), ts) order end to end; ``prefetch=False`` turns off
-        the lookahead for a strictly-one-partition memory bound."""
+        at db.rs:215). The global sort in :meth:`scan` is either one
+        partition or a range-partitioned shuffle, so partition-by-partition
+        consumption preserves the (comparator(key), ts) order end to end;
+        ``prefetch=False`` turns off the lookahead for a strictly-one-
+        partition memory bound. A scan small enough to sort in one partition
+        arrives as that one partition, so the driver holds its whole result —
+        at most ``advisoryPartitionSizeInBytes`` of input."""
         df = self.scan(time_range, key_range, comparator)
         return df.toLocalIterator(prefetchPartitions=prefetch)
 

@@ -422,7 +422,7 @@ def test_read_cache_point_gets(spark, db_path):
 def test_scan_iter_streamed_order(spark, db_path):
     """scan_iter yields the full grid incrementally in (key, ts) order —
     the reference's bounded-prefetch pull iterator (src/option.rs:150-153,
-    db.rs:215) as toLocalIterator over the range-partitioned sort."""
+    db.rs:215) as toLocalIterator over the scan's global sort."""
     num_ts, num_key = 6, 12
     db = HelixSpark.open(spark, db_path, HelixOptions(rick_range=16, auto_maintain=False))
     db.put([(t, le_u64(k), b"v") for t in range(num_ts) for k in range(num_key)])
@@ -930,3 +930,117 @@ def test_failing_tier_read_raises(spark, db_path, tmp_path):
         db.scan((0, 19)).count()
     # only a tier that vanished after the listing reads as absent
     assert db._read_tier(str(tmp_path / "gone"), HOT_SCHEMA) is None
+
+
+def test_scan_asof_commit_broken_tier_raises(spark, db_path):
+    """A snapshot read whose cold tier fails to read (a stray nested
+    partition directory) must raise like the live scan, not drop the cold
+    rows and answer from hot and trash alone."""
+    import glob
+    import os
+    import shutil
+
+    from pyspark.errors import PySparkException
+
+    db = HelixSpark.open(
+        spark,
+        db_path,
+        HelixOptions(rick_range=10, auto_maintain=False, keep_generations=2),
+    )
+    db.put([(t, b"k", b"v%d" % t) for t in range(30)])
+    db.compact(0, 9)
+    db.compact(10, 19)
+    assert db.scan_asof_commit(1, (0, 29)).count() == 30
+    gen0 = f"{db.layout.cold_gen_path(0)}/time_bucket=0"
+    os.makedirs(f"{gen0}/extra=1")
+    shutil.copy(glob.glob(f"{gen0}/*.parquet")[0], f"{gen0}/extra=1/x.parquet")
+    for read in (lambda: db.scan((0, 29)), lambda: db.scan_asof_commit(1, (0, 29))):
+        with pytest.raises(PySparkException, match="CONFLICTING_PARTITION_COLUMN_NAMES"):
+            read().count()
+    db.close()
+
+
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@pytest.mark.parametrize("cache_reads", [False, True])
+def test_scan_job_counts_both_sides_of_gate(spark, db_path, cache_reads):
+    """A scan whose buckets fit one post-shuffle partition sorts and counts
+    inside the dedup's partition: ordered scan and ``count()`` take 2 jobs
+    each (1 and 1 from a built read cache). Over the threshold (forced to
+    one byte) the range-partitioned sort comes back: 4 and 3 (3 and 2
+    cached). On both sides the rows and their order equal a brute-force
+    last-write-wins model under ``lexical`` and ``le_u64``, and
+    ``scan_iter`` yields the same sequence."""
+    from helixdb_spark.codecs import ARRAY_CODEC, CodecRegistry
+
+    reg = CodecRegistry()
+    # odd low bytes take ts_delta_xor (8-byte values only), the rest native
+    reg.register_dispatch(lambda k: "ts_delta_xor" if k[0] % 2 else ARRAY_CODEC)
+    db = HelixSpark.open(
+        spark,
+        db_path,
+        HelixOptions(
+            rick_range=10, outdate_range=1 << 30, auto_maintain=False,
+            cache_reads=cache_reads,
+        ),
+        codecs=reg,
+    )
+    # bytewise and numeric order disagree on these keys
+    keys = [le_u64(i) for i in (1, 2, 256, 257, 300)]
+
+    def val(key, ts, tag):
+        v = struct.pack("<d", ts + 0.5 * tag)
+        return v if key[0] % 2 else v + b"-native"
+
+    puts = [
+        [(t, k, val(k, t, 0)) for t in range(0, 50, 2) for k in keys],
+        [(t, k, val(k, t, 1)) for t in (14, 22, 36) for k in keys[:3]]
+        + [(t, k, val(k, t, 1)) for t in (51, 53) for k in keys],
+        [(22, keys[0], val(keys[0], 22, 2)), (36, keys[4], val(keys[4], 36, 3)),
+         (36, keys[4], val(keys[4], 36, 2))],
+    ]
+    db.put(puts[0])
+    db.compact(0, 39)  # buckets 0-3 cold, 4 hot
+    db.put(puts[1])
+    db.put(puts[2])
+    db.outdate(12)
+    model = _lww_model(puts, 12)
+    if cache_reads:
+        db.get(22, keys[0])  # builds the cached view once, off the count
+
+    def numeric(k):
+        return struct.unpack("<Q", k)[0]
+
+    def check(scan_jobs, count_jobs):
+        for cmp, order in ((comparators.lexical, bytes), (comparators.le_u64, numeric)):
+            want = [
+                (t, k, model[(t, k)])
+                for t, k in sorted(model, key=lambda p: (order(p[1]), p[0]))
+            ]
+            rows, jobs = _jobs_of(spark, lambda: db.scan((0, 60), comparator=cmp).collect())
+            assert jobs == scan_jobs
+            assert [(r["ts"], bytes(r["key"]), bytes(r["value"])) for r in rows] == want
+            streamed = [
+                (r["ts"], bytes(r["key"]), bytes(r["value"]))
+                for r in db.scan_iter((0, 60), comparator=cmp)
+            ]
+            assert streamed == want
+        ranged = db.scan((0, 60), (keys[1], keys[3]), comparator=comparators.le_u64)
+        assert [(r["ts"], bytes(r["key"])) for r in ranged.collect()] == [
+            (t, k) for t, k in sorted(model, key=lambda p: (numeric(p[1]), p[0]))
+            if 2 <= numeric(k) <= 257
+        ]
+        n, jobs = _jobs_of(
+            spark, lambda: db.scan((0, 60), comparator=comparators.NO_ORDER).count()
+        )
+        assert (n, jobs) == (len(model), count_jobs)
+
+    check(*((1, 1) if cache_reads else (2, 2)))
+    old = spark.conf.get(_ADVISORY)
+    spark.conf.set(_ADVISORY, "1b")
+    try:
+        check(*((3, 2) if cache_reads else (4, 3)))
+    finally:
+        spark.conf.set(_ADVISORY, old)
+    db.close()

@@ -49,6 +49,25 @@ def test_scan_prunes_time_bucket_partitions(kv_db):
     assert "time_bucket" in plan.split("PartitionFilters", 1)[1][:300]
 
 
+def test_small_scan_sorts_in_the_dedup_partition(spark, kv_db):
+    """A scan whose buckets fit one post-shuffle partition sorts inside the
+    dedup's partition: the dedup exchange is the only one. Over the
+    threshold (forced to one byte) the range-partitioned sort is back."""
+    import re
+
+    plan = plan_of(kv_db.scan((0, 499)))
+    assert "rangepartitioning" not in plan.lower()
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        plan = plan_of(kv_db.scan((0, 499)))
+    finally:
+        spark.conf.set(key, old)
+    assert plan.lower().count("rangepartitioning") == 1
+
+
 def test_get_plan_prunes_and_pushes_key(kv_db):
     # the plan get / get_many collect: one probe (ts 120 -> bucket 1)
     plan = plan_of(kv_db._point_df({(120, b"k1")}))
