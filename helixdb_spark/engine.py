@@ -20,10 +20,10 @@ LevelInfo              partition-pruned reads + a tiny JSON state file that
                        reference's fdatasync'd LEVEL_INFO superblock,
                        level_info.rs:98-111)
 MemIndex (index.rs)    not needed — parquet footers survive restart (S8)
-k-way merge            ``orderBy``: in the dedup's one post-shuffle partition
-(iterator.rs:111-195)  when the scanned buckets fit it, else a range-
-                       partitioned sort; toLocalIterator preserves order
-                       for streamed consumption
+k-way merge            ``orderBy``: in one task when the files a scan reads
+(iterator.rs:111-195)  are small, else a range-partitioned sort;
+                       toLocalIterator preserves order for streamed
+                       consumption
 ====================  =========================================================
 
 Scale posture (100 TB): every job here touches only the partitions named by
@@ -74,6 +74,17 @@ from helixdb_spark.maintenance import (
 # while amortizing the O(buckets) snapshot serialize across commits.
 STATE_CHECKPOINT_EVERY = 16
 
+# An ordered scan whose plan reads at most this many bytes of files sorts in
+# one task instead of behind a range-partitioned shuffle: two Spark jobs
+# fewer, but one core dedups and sorts every entry the scan keeps, so the
+# break-even follows the entries kept, which file bytes only bound.
+# Measured on 4 cores (scripts/scan_sort_breakeven.py, the densest layout
+# at 26 bytes an entry): keeping 1/16 of the keys, one task wins at every
+# size up to 24 MiB; keeping all keys, it wins at 6 MiB and is 1.5x slower
+# at 12 MiB (1.4-1.6x up to 24 MiB). Key-ranged scans of ordinary files (13 MB for two
+# kv_cold_read buckets) stay under it.
+SCAN_ONE_TASK_SORT_BYTES = 16 << 20
+
 
 def _state_delta(old: dict, new: dict) -> dict:
     """Commit record: top-level keys that changed plus cold_manifest entry
@@ -118,6 +129,37 @@ def _binary_sql(b: bytes) -> str:
     """A binary SQL literal. Probe sets reach the plan as one parsed SQL
     expression rather than one py4j call per literal."""
     return f"X'{b.hex()}'"
+
+
+def _key_ordered(df: DataFrame, comparator: comparators.Comparator) -> DataFrame:
+    """``df`` sorted by (comparator(key), ts). The sort key is projected
+    once per row first: an expression left in the sort order is evaluated
+    again on both rows of every comparison, which makes ``le_u64`` sorts
+    2.5-4x slower."""
+    return (
+        df.withColumn("_sort_key", comparator(F.col("key")))
+        .orderBy("_sort_key", "ts")
+        .drop("_sort_key")
+    )
+
+
+def _file_bytes(plan) -> int:
+    """On-disk bytes of the files a physical ``plan`` (a py4j ``SparkPlan``)
+    reads after partition pruning, from the file listing the plan already
+    holds, so it lists nothing itself. A cached view counts every file it
+    was built from."""
+    total = 0
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        name = leaf.getClass().getSimpleName()
+        if name == "FileSourceScanExec":
+            total += leaf.selectedPartitions().totalFileSize()
+        elif name == "InMemoryTableScanExec":
+            total += _file_bytes(leaf.relation().cachedPlan())
+        elif name == "AdaptiveSparkPlanExec":
+            total += _file_bytes(leaf.inputPlan())
+    return total
 
 
 def _last_write_wins(df: DataFrame) -> DataFrame:
@@ -1075,15 +1117,20 @@ class HelixSpark:
         The reference implements scan as a key-ordered loop of point gets per
         shard plus a k-way heap merge on the client (iterator.rs:111-195);
         here it is one declarative plan — filter (pushed to parquet), the
-        last-write-wins dedup, then a global sort. When the bucket dirs the
-        scan touches hold at most ``advisoryPartitionSizeInBytes`` (the size
-        AQE coalesces the dedup's output to anyway), the dedup's output is
-        coalesced to one partition and sorted there: ordered scan and
-        ``count()`` take 2 jobs each (1 from a built read cache). Larger
-        scans keep a range-partitioned sort shuffle (4 and 3 jobs), which
-        scales out instead of serializing through one task. Use
-        ``.toLocalIterator()`` for the streamed, backpressured consumption
-        the reference's bounded channels provide (option.rs:150-153).
+        last-write-wins dedup, then a global sort. When the files an ordered
+        scan's plan reads, after bucket pruning, hold at most
+        ``SCAN_ONE_TASK_SORT_BYTES`` on disk, the sort runs in one task: the
+        dedup's post-shuffle output is coalesced to one partition, which
+        satisfies the sort's distribution, so no range exchange and no
+        sampling job run (2 Spark jobs instead of 4), and the result is ONE
+        partition. A scan of a built read cache counts every file the cache
+        was built from and sorts in one task only when that whole cache is
+        small (1 job instead of 3). Larger scans keep the range-partitioned
+        sort shuffle, which scales out instead of serializing through one
+        task. An unordered scan (``NO_ORDER``) keeps the dedup's partitions.
+        Use ``.toLocalIterator()`` for the streamed, backpressured
+        consumption the reference's bounded channels provide
+        (option.rs:150-153).
         """
         self._check_open()
         ts_lo, ts_hi = time_range
@@ -1098,41 +1145,16 @@ class HelixSpark:
             )
         df = self._entries_df(ts_lo=ts_lo, ts_hi=ts_hi, pre_filter=key_pred)
         df = df.select("ts", "key", "value")
-        if self._fits_one_partition(ts_lo, ts_hi):
-            # after the dedup exchange, so scan and decode keep their
-            # parallelism; one partition satisfies the sort's and count()'s
-            # distributions, so neither adds an exchange
-            df = df.coalesce(1)
         if comparator is not None:
-            df = df.orderBy(comparator(F.col("key")), F.col("ts"))
+            if _file_bytes(df._jdf.queryExecution().sparkPlan()) <= SCAN_ONE_TASK_SORT_BYTES:
+                # one partition satisfies the sort's distribution, so it adds
+                # no exchange. The coalesce sits after the dedup exchange, so
+                # scan and decode keep their parallelism; over a cached view
+                # it also takes the filter into the one task, which the gate
+                # bounds by counting every file the cache was built from
+                df = df.coalesce(1)
+            df = _key_ordered(df, comparator)
         return df
-
-    def _fits_one_partition(self, ts_lo: int, ts_hi: int) -> bool:
-        """Whether the bucket dirs a ``[ts_lo, ts_hi]`` scan reads (hot
-        ``time_bucket=b`` plus the manifest's cold ``gen=g/time_bucket=b``)
-        hold at most ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
-        the size AQE coalesces the dedup's post-shuffle partitions to.
-        Listing stops once the running total passes it, so a large scan
-        costs about one directory listing."""
-        limit = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        )
-        b_lo, b_hi = self.layout.bucket_of(ts_lo), self.layout.bucket_of(ts_hi)
-        dirs = [
-            f"{self.layout.hot_path}/time_bucket={b}"
-            for b in self._fs.list_buckets(self.layout.hot_path)
-            if b_lo <= b <= b_hi
-        ] + [
-            f"{self.layout.cold_gen_path(int(g))}/time_bucket={b}"
-            for b, g in (self._state.get("cold_manifest") or {}).items()
-            if b_lo <= int(b) <= b_hi
-        ]
-        total = 0
-        for d in dirs:
-            total += sum(self._fs.file_sizes(d).values())
-            if total > limit:
-                return False
-        return True
 
     def scan_asof_commit(
         self,
@@ -1209,7 +1231,7 @@ class HelixSpark:
             )
         df = _last_write_wins(df).select("ts", "key", "value")
         if comparator is not None:
-            df = df.orderBy(comparator(F.col("key")), F.col("ts"))
+            df = _key_ordered(df, comparator)
         return df
 
     def scan_iter(
@@ -1227,9 +1249,10 @@ class HelixSpark:
         partition or a range-partitioned shuffle, so partition-by-partition
         consumption preserves the (comparator(key), ts) order end to end;
         ``prefetch=False`` turns off the lookahead for a strictly-one-
-        partition memory bound. A scan small enough to sort in one partition
-        arrives as that one partition, so the driver holds its whole result —
-        at most ``advisoryPartitionSizeInBytes`` of input."""
+        partition memory bound. An ordered scan small enough to sort in one
+        task arrives as that one partition, so the driver holds its whole
+        result — rows from at most ``SCAN_ONE_TASK_SORT_BYTES`` of on-disk
+        files."""
         df = self.scan(time_range, key_range, comparator)
         return df.toLocalIterator(prefetchPartitions=prefetch)
 

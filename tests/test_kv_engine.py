@@ -960,18 +960,18 @@ def test_scan_asof_commit_broken_tier_raises(spark, db_path):
     db.close()
 
 
-_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-
-
 @pytest.mark.parametrize("cache_reads", [False, True])
-def test_scan_job_counts_both_sides_of_gate(spark, db_path, cache_reads):
-    """A scan whose buckets fit one post-shuffle partition sorts and counts
-    inside the dedup's partition: ordered scan and ``count()`` take 2 jobs
-    each (1 and 1 from a built read cache). Over the threshold (forced to
-    one byte) the range-partitioned sort comes back: 4 and 3 (3 and 2
-    cached). On both sides the rows and their order equal a brute-force
+def test_scan_job_counts_both_sides_of_gate(spark, db_path, cache_reads, monkeypatch):
+    """An ordered scan whose files fit ``SCAN_ONE_TASK_SORT_BYTES`` sorts
+    in one task: 2 jobs (1 from a built read cache). Over the threshold
+    (forced to zero bytes) the range-partitioned sort comes back: 4 jobs (3
+    cached). An unordered ``count()`` keeps the dedup's partitions on both
+    sides: 3 jobs (2 cached). The rows and their order equal a brute-force
     last-write-wins model under ``lexical`` and ``le_u64``, and
-    ``scan_iter`` yields the same sequence."""
+    ``scan_iter`` yields the same sequence. The gate counts the files of
+    the scanned buckets, but every file a read cache was built from, so a
+    narrow scan of a large cache keeps the range-partitioned sort."""
+    from helixdb_spark import engine
     from helixdb_spark.codecs import ARRAY_CODEC, CodecRegistry
 
     reg = CodecRegistry()
@@ -1036,11 +1036,14 @@ def test_scan_job_counts_both_sides_of_gate(spark, db_path, cache_reads):
         )
         assert (n, jobs) == (len(model), count_jobs)
 
-    check(*((1, 1) if cache_reads else (2, 2)))
-    old = spark.conf.get(_ADVISORY)
-    spark.conf.set(_ADVISORY, "1b")
-    try:
-        check(*((3, 2) if cache_reads else (4, 3)))
-    finally:
-        spark.conf.set(_ADVISORY, old)
+    def plan(time_range):
+        return db.scan(time_range)._jdf.queryExecution().executedPlan().toString()
+
+    check(1 if cache_reads else 2, 2 if cache_reads else 3)
+    assert "rangepartitioning" not in plan((0, 60))
+    whole = engine._file_bytes(db._entries_df()._jdf.queryExecution().sparkPlan())
+    monkeypatch.setattr(engine, "SCAN_ONE_TASK_SORT_BYTES", whole - 1)
+    assert ("rangepartitioning" in plan((20, 29))) == cache_reads
+    monkeypatch.setattr(engine, "SCAN_ONE_TASK_SORT_BYTES", 0)
+    check(3 if cache_reads else 4, 2 if cache_reads else 3)
     db.close()

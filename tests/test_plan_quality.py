@@ -49,22 +49,21 @@ def test_scan_prunes_time_bucket_partitions(kv_db):
     assert "time_bucket" in plan.split("PartitionFilters", 1)[1][:300]
 
 
-def test_small_scan_sorts_in_the_dedup_partition(spark, kv_db):
-    """A scan whose buckets fit one post-shuffle partition sorts inside the
-    dedup's partition: the dedup exchange is the only one. Over the
-    threshold (forced to one byte) the range-partitioned sort is back."""
+def test_small_scan_sorts_in_the_dedup_partition(kv_db, monkeypatch):
+    """An ordered scan whose files fit ``SCAN_ONE_TASK_SORT_BYTES`` sorts
+    inside the dedup's partition: the dedup exchange is the only one. Over
+    the threshold (forced to zero bytes) the range-partitioned sort is
+    back. An unordered scan is never coalesced."""
     import re
+
+    from helixdb_spark import comparators, engine
 
     plan = plan_of(kv_db.scan((0, 499)))
     assert "rangepartitioning" not in plan.lower()
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "1b")
-    try:
-        plan = plan_of(kv_db.scan((0, 499)))
-    finally:
-        spark.conf.set(key, old)
+    assert "Coalesce" not in plan_of(kv_db.scan((0, 499), comparator=comparators.NO_ORDER))
+    monkeypatch.setattr(engine, "SCAN_ONE_TASK_SORT_BYTES", 0)
+    plan = plan_of(kv_db.scan((0, 499)))
     assert plan.lower().count("rangepartitioning") == 1
 
 
