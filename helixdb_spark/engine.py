@@ -1881,9 +1881,13 @@ class HelixSpark:
         every append also computes the cheap assignment-SHARE drift
         statistic (``AnnIndexStore.ivf_share_drift`` — the total-variation
         distance between the newest segment's per-list assignment shares
-        and the fit segment's; one combined scan of (seg, centroid_id)
-        pairs the index already stores, no vectors, NO truth tier). When
-        it exceeds the threshold, ``drift_action`` fires:
+        and the fit segment's, from the per-list counts the descriptor
+        records at write time, or one scan of the lists table's (seg,
+        centroid_id) pairs past ``LIST_COUNT_META_CAP`` lists; no vectors,
+        NO truth tier). An empty newest
+        segment has drift 0.0, so a commit that adds no corpus rows never
+        trips the policy. When it exceeds the threshold, ``drift_action``
+        fires:
 
         - ``"invalidate"`` (default): flip the index stale — readers get
           ``StaleIndexError`` instead of silently degraded recall, and
@@ -1923,18 +1927,12 @@ class HelixSpark:
     def _refresh_indexes(self, bounds: "tuple[int, int] | None" = None) -> None:
         for (store, name, corpus_fn, max_segments, drift_threshold,
              drift_action, delta_scan, kw) in self._index_registry:
-            desc = store._state["indexes"].get(name)
-            if desc is None or desc.get("stale"):
+            info = store.list_indexes().get(name)
+            if info is None or info["stale"]:
                 continue  # never built / invalidated — rebuilding is the
                 # owner's call, not the maintenance loop's
-            append = {
-                "pq": store.append_pq,
-                "lsh": store.append_lsh,
-                "minhash": store.append_minhash,
-                "ivf": store.append_ivf,
-                "ivfpq": store.append_ivfpq,
-            }[desc["kind"]]
-            if delta_scan and bounds is not None and desc["kind"] in (
+            append = getattr(store, f"append_{info['kind']}")
+            if delta_scan and bounds is not None and info["kind"] in (
                 "lsh", "ivf", "minhash"
             ):
                 # O(commit) refresh (r12): corpus_fn reads a scan-restricted
@@ -1956,7 +1954,7 @@ class HelixSpark:
                 continue  # refit reset the chain / invalidate ended it
             if (
                 max_segments is not None
-                and len(store._segments(new_desc)) > max_segments
+                and len(new_desc["segments"]) > max_segments
             ):
                 store.compact_index(name)
 
@@ -1972,7 +1970,7 @@ class HelixSpark:
                 "drift_threshold reads IVF list routing; index "
                 f"{name!r} is kind {desc['kind']!r} (only 'ivf' supports it)"
             )
-        if len(store._segments(desc)) <= 1:
+        if len(desc["segments"]) <= 1:
             return False  # nothing appended yet — no drift to measure
         drift = float(store.ivf_share_drift(name).first()["share_drift"])
         if drift <= threshold:
@@ -2004,13 +2002,13 @@ class HelixSpark:
         occupied bucket), so this path launches no Spark jobs; the r8
         version counted the corpus once per index per outdate()."""
         for store, name, *_rest in self._index_registry:
-            desc = store._state["indexes"].get(name)
-            if desc is None or desc.get("stale"):
+            info = store.list_indexes().get(name)
+            if info is None or info["stale"]:
                 continue
             store.invalidate(
                 name,
                 f"retention (outdate cutoff={cutoff}) may have purged rows "
-                f"covered by the index (n_rows={desc['n_rows']})",
+                f"covered by the index (n_rows={info['n_rows']})",
             )
 
     # ------------------------------------------------------------------ misc

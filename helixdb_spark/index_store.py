@@ -11,9 +11,8 @@ flip the cold generations use (fsio.write_text_cas), so readers never see
 a half-written index and a crashed writer leaves the previous generation
 live.
 
-Segmented layout (round 7 — the incremental-maintenance upgrade): each
-index table lives under ONE parquet root with the generation as a partition
-column::
+Segmented layout: each index table lives under ONE parquet root with the
+generation as a partition column::
 
     {base}/{name}/{table}/seg={g}/...
 
@@ -22,10 +21,21 @@ numbers that make up the index. A read is a single scan of the table root
 with ``seg IN (committed)``, which Spark resolves as PARTITION PRUNING, so
 uncommitted/superseded segments cost nothing and the probe-side pruning
 (``_bucket`` / ``centroid_id``) composes with it in the same scan node.
-An ingest delta is then a pure encode-and-append: hash planes, MinHash
-coefficients, PQ codebooks and IVF centroids are all frozen state, so
-``append_*`` encodes ONLY the new rows into a fresh segment and commits
-``segments + [new]`` — exactly how the reference folds new data into
+A descriptor without ``segments`` is refused when the store opens; such an
+index must be rebuilt.
+
+One table spec (``_KINDS``) says, for each index kind, which tables it
+owns, the partition column of each, which table's row count is the
+descriptor's ``n_rows``, and which tables are frozen fit-time state. Every
+kind then shares one write path (``_write``: reserve a generation, stage
+each table, commit the descriptor) and one append path (``_append``:
+anti-join the delta against the committed ids unless the caller promises
+disjoint batches, stage the new segment, commit ``segments + [new]``); the
+public ``write_*`` / ``append_*`` methods keep only what is specific to
+their kind: fitting and encoding. An ingest delta is a pure
+encode-and-append: hash planes, MinHash coefficients, PQ codebooks and IVF
+centroids are all frozen state, so ``append_*`` encodes ONLY the new rows
+into a fresh segment — exactly how the reference folds new data into
 per-level indexes at compaction (src/file/sstable.rs:94-143 driven by
 src/level.rs:430-447) instead of re-reading the corpus. ``compact_index``
 folds a long chain back to one segment (the small-file axis).
@@ -55,7 +65,8 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Optional
+from collections import Counter
+from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,16 +97,39 @@ SINGLE_FILE_APPEND_ROWS = 100_000
 # segment the drift statistics fall back to the lists-table scan path
 LIST_COUNT_META_CAP = 65536
 
-# parquet tables each index kind owns (segment dirs live under each)
-KIND_TABLES = {
-    "pq": ("codes",),
-    "lsh": ("buckets",),
-    "minhash": ("bands", "shingles"),
-    "ivf": ("lists", "centroids"),
+
+class _Kind(NamedTuple):
+    """What the shared write / append / fold paths need to know of a kind."""
+
+    tables: dict  # table -> partition column (None: unpartitioned), staging order
+    counted: str  # the table whose row count is the descriptor's n_rows
+    frozen: tuple = ()  # fit-time tables an append reads but never restages
+    list_counts: bool = False  # record per-list counts of "lists" (ivf drift)
+
+
+_KINDS = {
+    "pq": _Kind({"codes": None}, "codes"),
+    "lsh": _Kind({"buckets": "_bucket"}, "buckets"),
+    "minhash": _Kind({"bands": None, "shingles": None}, "shingles"),
+    "ivf": _Kind(
+        {"lists": "centroid_id", "centroids": None}, "lists", ("centroids",),
+        list_counts=True,
+    ),
     # IVFADC: "lists" carries (id, centroid_id, code_*) — the inverted
     # lists store PQ codes instead of raw vectors, partitioned by list
-    "ivfpq": ("lists", "centroids"),
+    "ivfpq": _Kind(
+        {"lists": "centroid_id", "centroids": None}, "lists", ("centroids",)
+    ),
 }
+
+
+def _stride_centroids(corpus, stride, id_col, vec_col) -> DataFrame:
+    """The fixed-stride centroid rule: rows whose id is a multiple of
+    ``stride``."""
+    return corpus.where((F.col(id_col) % stride) == 0).select(
+        F.col(id_col).alias("centroid_id"),
+        F.col(vec_col).alias("_cvec"),
+    )
 
 
 def source_fingerprint(*paths: str) -> str:
@@ -168,9 +202,17 @@ class AnnIndexStore:
         text, self._state_version = self._fs.read_text_versioned(
             self._meta_path
         )
-        if text is not None:
-            return json.loads(text)
-        return {"gen_seq": 0, "indexes": {}}
+        if text is None:
+            return {"gen_seq": 0, "indexes": {}}
+        state = json.loads(text)
+        for name, desc in state["indexes"].items():
+            if desc.get("segments") is None:
+                raise ValueError(
+                    f"index {name!r} at {self.base} has no 'segments' list "
+                    "(the pre-segment layout is no longer read): rebuild "
+                    "this index in a fresh store with the matching write_*"
+                )
+        return state
 
     def _save_state(self) -> None:
         # CAS publish (fsio.write_text_cas): a concurrent index writer
@@ -192,10 +234,6 @@ class AnnIndexStore:
         return gen
 
     # ---------------------------------------------------------------- layout
-    def _gen_path(self, name: str, gen: int) -> str:
-        # legacy (pre-segment) layout — still readable, never written
-        return f"{self.base}/{name}/gen={int(gen)}"
-
     def _table_root(self, name: str, table: str) -> str:
         return f"{self.base}/{name}/{table}"
 
@@ -204,7 +242,7 @@ class AnnIndexStore:
 
     @staticmethod
     def _segments(desc: dict) -> list[int]:
-        return [int(s) for s in desc.get("segments", [desc["gen"]])]
+        return [int(s) for s in desc["segments"]]
 
     def _local_df(self, rows, schema: str) -> DataFrame:
         """Driver-sized result relation with ONE partition.
@@ -225,14 +263,17 @@ class AnnIndexStore:
         in-flight segments are never opened, and a probe-side partition
         filter (``_bucket`` / ``centroid_id``) prunes within the same scan
         node."""
-        if "segments" not in desc:  # legacy single-generation layout
-            return self.spark.read.parquet(
-                f"{self._gen_path(name, desc['gen'])}/{table}"
-            )
         df = self.spark.read.parquet(self._table_root(name, table))
         return df.where(
             F.col("seg").isin(self._segments(desc))
         ).drop("seg")
+
+    def _read(self, name: str, kind: str) -> tuple:
+        """(descriptor, *committed tables in spec order) of one index."""
+        desc = self._descriptor(name, kind)
+        return desc, *(
+            self._read_table(name, desc, t) for t in _KINDS[kind].tables
+        )
 
     def _commit(self, name: str, desc: dict) -> None:
         """Flip the pointer to the freshly-staged segment set, then trash
@@ -243,15 +284,8 @@ class AnnIndexStore:
         self._save_state()
         if old is None:
             return
-        if "segments" not in old:
-            # legacy whole-generation dir
-            self._fs.move(
-                self._gen_path(name, old["gen"]),
-                f"{self.base}/trash/{name}/gen={old['gen']}",
-            )
-            return
         dropped = set(self._segments(old)) - set(self._segments(desc))
-        for table in KIND_TABLES[old["kind"]]:
+        for table in _KINDS[old["kind"]].tables:
             for g in dropped:
                 self._fs.move(
                     self._seg_path(name, table, g),
@@ -333,9 +367,7 @@ class AnnIndexStore:
         self._fs.delete(f"{self.base}/trash")
         for name, desc in self._state["indexes"].items():
             live = set(self._segments(desc))
-            if "segments" not in desc:
-                continue  # legacy layout has no seg dirs to sweep
-            for table in KIND_TABLES[desc["kind"]]:
+            for table in _KINDS[desc["kind"]].tables:
                 root = self._table_root(name, table)
                 for child in self._fs.listdir(root):
                     if not child.startswith("seg="):
@@ -388,22 +420,118 @@ class AnnIndexStore:
             return None
         return int(obs.get["n"])
 
-    def _list_counts_readback(
-        self, name: str, gen: int, n_rows: int | None
-    ) -> "dict[int, int] | None":
-        """Per-list row counts of ONE freshly staged lists segment, read
-        from the segment's parquet footers (count over the partition
-        column opens no data pages — ~one tiny task per file). This one
-        cheap job at write time buys every later drift check
-        (``ivf_share_drift*``) its zero-scan metadata path; ``None``
-        (above ``LIST_COUNT_META_CAP`` lists) keeps the descriptor
-        driver-sized and falls back to the scan path."""
-        if not n_rows:
-            # an empty staged segment has no readable parquet files; its
-            # counts are exactly {}
-            return {}
+    def _stage_segment(
+        self, name: str, kind: str, tables: dict, gen: int
+    ) -> int:
+        """Stage ``tables`` (all of the kind's tables, or an append's
+        non-frozen ones) as segment ``gen`` in spec order, each under its
+        spec partition column; returns the counted table's row count,
+        observed on its write job."""
+        spec = _KINDS[kind]
+        n_rows = {
+            t: self._stage(tables[t], name, t, gen, part_by, t == spec.counted)
+            for t, part_by in spec.tables.items()
+            if t in tables
+        }
+        return n_rows[spec.counted]
+
+    def _write(
+        self, name: str, kind: str, tables: dict, params: dict,
+        fingerprint: str | None,
+    ) -> dict:
+        """Commit a fresh one-segment index: reserve a generation, stage
+        every table of ``kind``, then flip the descriptor (``params`` is the
+        kind's fitted, driver-sized state)."""
+        gen = self._reserve_gen()
+        n_rows = self._stage_segment(name, kind, tables, gen)
+        desc = {
+            "kind": kind, "gen": gen, "segments": [gen], **params,
+            "n_rows": n_rows, "fingerprint": fingerprint,
+        }
+        prior = {} if _KINDS[kind].list_counts else None
+        self._record_list_counts(desc, name, gen, n_rows, prior)
+        self._commit(name, desc)
+        return desc
+
+    def _append(
+        self, name: str, kind: str, corpus: DataFrame,
+        fingerprint: str | None, assume_new: bool, encode,
+    ) -> dict:
+        """Append the rows of ``corpus`` missing from the committed index as
+        one new segment under the frozen state.
+
+        The kind's frozen tables are read first (they feed the encode);
+        then, unless ``assume_new``, the corpus is anti-joined on the id
+        against the counted table and an empty delta returns the
+        descriptor unchanged (no generation burned). ``encode(desc, fresh,
+        frozen)`` returns the new segment's tables. ``assume_new`` callers
+        promise disjoint batches, so the committed tables are never opened
+        and the emptiness probe job is skipped; a violated promise stages
+        an empty segment or duplicate rows, never corrupts committed ones.
+        """
+        spec = _KINDS[kind]
+        desc = self._descriptor(name, kind)
+        frozen = {t: self._read_table(name, desc, t) for t in spec.frozen}
+        fresh = corpus
+        if not assume_new:
+            id_col = desc["id_col"]
+            committed = self._read_table(name, desc, spec.counted)
+            fresh = corpus.join(committed.select(id_col), id_col, "left_anti")
+            if fresh.isEmpty():
+                return desc
+        tables = encode(desc, fresh, frozen)
+        gen = self._reserve_gen()
+        n_new = self._stage_segment(name, kind, tables, gen)
+        new_desc = dict(desc)
+        new_desc.update(
+            {
+                "gen": gen,
+                "segments": self._segments(desc) + [gen],
+                "n_rows": int(desc["n_rows"]) + n_new,
+                "fingerprint": fingerprint or desc.get("fingerprint"),
+            }
+        )
+        self._record_list_counts(
+            new_desc, name, gen, n_new, desc.get("list_counts")
+        )
+        self._commit(name, new_desc)
+        return new_desc
+
+    @staticmethod
+    def _codebooks_json(codebooks) -> list:
+        # JSON round-trips doubles exactly (repr-based), so the reopened
+        # codebook is bit-identical to the fitted one
+        return [
+            [[int(cid), [float(x) for x in cv]] for cid, cv in book]
+            for book in codebooks
+        ]
+
+    @staticmethod
+    def _codebooks(desc: dict) -> list:
+        return [
+            [(int(cid), [float(x) for x in cv]) for cid, cv in book]
+            for book in desc["codebooks"]
+        ]
+
+    def _record_list_counts(
+        self, desc: dict, name: str, gen: int, n_rows: int, prior
+    ) -> None:
+        """Set ``desc["list_counts"]`` to ``prior`` plus the per-list row
+        counts of the freshly staged lists segment ``gen``, read from the
+        segment's parquet footers (count over the partition column opens
+        no data pages — ~one tiny task per file). This one cheap job at
+        write time buys every later drift check (``ivf_share_drift*``) its
+        zero-scan metadata path. No counts are kept when ``prior`` is None
+        (the index keeps none) or the segment has more than
+        ``LIST_COUNT_META_CAP`` lists (keeps the descriptor driver-sized;
+        drift then falls back to the scan path)."""
+        desc.pop("list_counts", None)
+        if prior is None:
+            return
         path = self._seg_path(name, "lists", gen)
-        cnts = self._local_footer_counts(path)
+        # an empty staged segment has no readable parquet files; its
+        # counts are exactly {}
+        cnts = self._local_footer_counts(path) if n_rows else {}
         if cnts is None:
             rows = (
                 self.spark.read.parquet(path)
@@ -412,9 +540,10 @@ class AnnIndexStore:
                 .collect()
             )
             cnts = {int(r["centroid_id"]): int(r["_n"]) for r in rows}
-        if len(cnts) > LIST_COUNT_META_CAP:
-            return None
-        return cnts
+        if len(cnts) <= LIST_COUNT_META_CAP:
+            desc["list_counts"] = {
+                **prior, str(gen): {str(c): n for c, n in cnts.items()}
+            }
 
     @staticmethod
     def _local_footer_counts(path: str) -> "dict[int, int] | None":
@@ -513,40 +642,18 @@ class AnnIndexStore:
             corpus, m, k, n_iter, id_col, vec_col,
             train_fraction=train_fraction,
         )
-        gen = self._reserve_gen()
-        n_rows = self._stage(
-            self._encode_pq(corpus, codebooks, sub_d, m, id_col, vec_col),
-            name, "codes", gen,
-        )
-        desc = {
-            "kind": "pq",
-            "gen": gen,
-            "segments": [gen],
-            "m": m,
-            "k": k,
-            "n_iter": n_iter,
-            "sub_d": sub_d,
-            "id_col": id_col,
-            "n_rows": n_rows,
-            "fingerprint": fingerprint,
-            # JSON round-trips doubles exactly (repr-based), so the
-            # reopened codebook is bit-identical to the fitted one
-            "codebooks": [
-                [[int(cid), [float(x) for x in cv]] for cid, cv in book]
-                for book in codebooks
-            ],
-        }
-        self._commit(name, desc)
-        return desc
+        codes = self._encode_pq(corpus, codebooks, sub_d, m, id_col, vec_col)
+        return self._write(name, "pq", {"codes": codes}, {
+            "m": m, "k": k, "n_iter": n_iter, "sub_d": sub_d,
+            "id_col": id_col, "codebooks": self._codebooks_json(codebooks),
+        }, fingerprint)
 
     @staticmethod
     def _encode_pq(corpus, codebooks, sub_d, m, id_col, vec_col) -> DataFrame:
-        from helixdb_spark.operators.similarity import assign_struct_sql
-
         return spread(corpus).select(
             F.col(id_col),
             *[
-                assign_struct_sql(
+                sim.assign_struct_sql(
                     f"slice({vec_col}, {j * sub_d + 1}, {sub_d})",
                     codebooks[j],
                 )["cluster_id"].alias(f"code_{j}")
@@ -556,14 +663,8 @@ class AnnIndexStore:
 
     def read_pq(self, name: str = "pq") -> tuple[list, int, DataFrame]:
         """(codebooks, sub_d, codes DataFrame) for a committed PQ index."""
-        desc = self._descriptor(name, "pq")
-        codebooks = [
-            [(int(cid), [float(x) for x in cv]) for cid, cv in book]
-            for book in desc["codebooks"]
-        ]
-        return codebooks, int(desc["sub_d"]), self._read_table(
-            name, desc, "codes"
-        )
+        desc, codes = self._read(name, "pq")
+        return self._codebooks(desc), int(desc["sub_d"]), codes
 
     def pq_adc_topk(
         self,
@@ -577,13 +678,12 @@ class AnnIndexStore:
         are read at query time — the scan touches m small-int columns only.
         Shares similarity.pq_adc_from_codes with the in-session path, so
         results are bit-identical to a fresh fit."""
-        desc = self._descriptor(name, "pq")
-        codebooks, sub_d, codes = self.read_pq(name)
+        desc, codes = self._read(name, "pq")
         return pq_adc_from_codes(
             codes,
             queries,
-            codebooks,
-            sub_d,
+            self._codebooks(desc),
+            int(desc["sub_d"]),
             k_nn=k_nn,
             m=int(desc["m"]),
             id_col=desc["id_col"],
@@ -606,38 +706,16 @@ class AnnIndexStore:
         absorbs a 1% ingest without re-reading (or re-writing) the other
         99% — the reference's per-level index rebuild at compaction
         (src/file/sstable.rs:94-143) expressed as segment append."""
-        desc = self._descriptor(name, "pq")
-        codebooks, sub_d, codes = self.read_pq(name)
-        m, id_col = int(desc["m"]), desc["id_col"]
-        fresh = spread(corpus).join(
-            codes.select(id_col), id_col, "left_anti"
+
+        def encode(desc, fresh, _frozen):
+            return {"codes": self._encode_pq(
+                fresh, self._codebooks(desc), int(desc["sub_d"]),
+                int(desc["m"]), desc["id_col"], vec_col,
+            )}
+
+        return self._append(
+            name, "pq", spread(corpus), fingerprint, False, encode
         )
-        if fresh.isEmpty():  # nothing new: no generation burned
-            return desc
-        if "segments" not in desc:
-            # legacy layout can't take segment appends — migrate by
-            # rebuilding once under the frozen codebooks
-            return self.write_pq(
-                corpus, name=name, m=m, k=int(desc["k"]),
-                n_iter=int(desc["n_iter"]), id_col=id_col, vec_col=vec_col,
-                prefit=(codebooks, sub_d), fingerprint=fingerprint,
-            )
-        gen = self._reserve_gen()
-        n_new = self._stage(
-            self._encode_pq(fresh, codebooks, sub_d, m, id_col, vec_col),
-            name, "codes", gen,
-        )
-        new_desc = dict(desc)
-        new_desc.update(
-            {
-                "gen": gen,
-                "segments": self._segments(desc) + [gen],
-                "n_rows": int(desc["n_rows"]) + n_new,
-                "fingerprint": fingerprint or desc.get("fingerprint"),
-            }
-        )
-        self._commit(name, new_desc)
-        return new_desc
 
     # ------------------------------------------------------------------- LSH
     def write_lsh(
@@ -654,28 +732,16 @@ class AnnIndexStore:
         persist it ``partitionBy(_bucket)``: a probe filters on its own
         bucket value, which Spark resolves as PARTITION PRUNING — only
         1/2^P of the files are ever opened."""
-        gen = self._reserve_gen()
         bucketed = spread(corpus).withColumn(
             "_bucket", lsh_bucket(F.col(vec_col), num_planes, dim)
         )
-        n_rows = self._stage(bucketed, name, "buckets", gen, "_bucket")
-        desc = {
-            "kind": "lsh",
-            "gen": gen,
-            "segments": [gen],
-            "num_planes": num_planes,
-            "dim": dim,
-            "id_col": id_col,
+        return self._write(name, "lsh", {"buckets": bucketed}, {
+            "num_planes": num_planes, "dim": dim, "id_col": id_col,
             "vec_col": vec_col,
-            "n_rows": n_rows,
-            "fingerprint": fingerprint,
-        }
-        self._commit(name, desc)
-        return desc
+        }, fingerprint)
 
     def read_lsh(self, name: str = "lsh") -> tuple[dict, DataFrame]:
-        desc = self._descriptor(name, "lsh")
-        return desc, self._read_table(name, desc, "buckets")
+        return self._read(name, "lsh")
 
     def lsh_topk(
         self,
@@ -720,70 +786,34 @@ class AnnIndexStore:
         read): constructing its DataFrame costs one distributed
         file-listing job per committed segment — an O(chain) ladder the
         whole point of assume_new is to avoid."""
-        desc = self._descriptor(name, "lsh")
-        if "segments" not in desc:
-            return self.write_lsh(
-                corpus, name=name, num_planes=int(desc["num_planes"]),
-                dim=int(desc["dim"]), id_col=desc["id_col"],
-                vec_col=desc["vec_col"], fingerprint=fingerprint,
-            )
-        id_col = desc["id_col"]
-        if assume_new:
-            fresh = spread(corpus)
-        else:
-            bucketed = self._read_table(name, desc, "buckets")
-            fresh = spread(corpus).join(
-                bucketed.select(id_col), id_col, "left_anti"
-            )
-        if not assume_new and fresh.isEmpty():
-            # assume_new callers promise non-empty disjoint batches, so the
-            # emptiness probe job is skipped; a violated promise stages an
-            # empty segment (one burned gen), never corrupts committed ones
-            return desc
-        gen = self._reserve_gen()
-        staged = fresh.withColumn(
-            "_bucket",
-            lsh_bucket(
+
+        def encode(desc, fresh, _frozen):
+            return {"buckets": fresh.withColumn("_bucket", lsh_bucket(
                 F.col(desc["vec_col"]), int(desc["num_planes"]),
                 int(desc["dim"]),
-            ),
+            ))}
+
+        return self._append(
+            name, "lsh", spread(corpus), fingerprint, assume_new, encode
         )
-        n_new = self._stage(staged, name, "buckets", gen, "_bucket")
-        new_desc = dict(desc)
-        new_desc.update(
-            {
-                "gen": gen,
-                "segments": self._segments(desc) + [gen],
-                "n_rows": int(desc["n_rows"]) + n_new,
-                "fingerprint": fingerprint or desc.get("fingerprint"),
-            }
-        )
-        self._commit(name, new_desc)
-        return new_desc
 
     # --------------------------------------------------------------- MinHash
     def _minhash_tables(
         self, docs: DataFrame, id_col: str, text_col: str, n: int,
         num_hashes: int, bands: int,
-        caches: list | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
-        """(band table, shingle table) for a document set under the frozen
-        MinHash state (coefficients are deterministic in num_hashes).
-
-        ``caches``: when the caller will MATERIALIZE both outputs (the
-        write/append staging path), pass a list — the shingled
-        intermediate is persisted (and appended to the list for the
-        caller to unpersist) so the normalize+shingle+hash pass runs once
-        instead of once per staged table."""
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(band table, shingle table, shingled cache) for a document set
+        under the frozen MinHash state (coefficients are deterministic in
+        num_hashes). Both tables are staged, so the shingled intermediate
+        is persisted — the normalize+shingle+hash pass runs once instead of
+        once per staged table — and the caller unpersists the returned
+        cache once staging is done."""
         from helixdb_spark.operators import dedup as _dd
 
         rows = num_hashes // bands
         shingled = _dd.doc_shingles(docs, id_col, text_col, n).withColumn(
             "bhs", F.transform("shingles", lambda s: _dd._hex_long(s, 8))
-        )
-        if caches is not None:
-            shingled = shingled.persist()
-            caches.append(shingled)
+        ).persist()
         coeffs = _dd.minhash_coeffs(num_hashes)
         prime = F.lit(_dd.MINHASH_PRIME).cast("long")
 
@@ -817,7 +847,7 @@ class AnnIndexStore:
         stacked = sig.select(
             F.col(id_col), F.explode(band_key_array).alias("band_key")
         )
-        return stacked, shingled.select(id_col, "shingles")
+        return stacked, shingled.select(id_col, "shingles"), shingled
 
     def write_minhash(
         self,
@@ -840,44 +870,27 @@ class AnnIndexStore:
 
         num_hashes = _dd.NUM_MINHASHES if num_hashes is None else num_hashes
         bands = _dd.LSH_BANDS if bands is None else bands
-        caches: list = []
-        stacked, shingles = self._minhash_tables(
-            docs, id_col, text_col, n, num_hashes, bands, caches=caches
+        stacked, shingles, shingled = self._minhash_tables(
+            docs, id_col, text_col, n, num_hashes, bands
         )
-        gen = self._reserve_gen()
         try:
-            self._stage(stacked, name, "bands", gen, count=False)
-            n_rows = self._stage(shingles, name, "shingles", gen)
+            return self._write(
+                name, "minhash", {"bands": stacked, "shingles": shingles}, {
+                    "n": n, "num_hashes": num_hashes, "bands": bands,
+                    # hash-family version: a store whose signatures were
+                    # built under a different prime (the r12 family fix)
+                    # must re-index, not serve stale band keys — validate()
+                    # checks this
+                    "prime": _dd.MINHASH_PRIME,
+                    "id_col": id_col, "text_col": text_col,
+                }, fingerprint,
+            )
         finally:  # staging is eager — safe to release
-            for c in caches:
-                c.unpersist()
-        desc = {
-            "kind": "minhash",
-            "gen": gen,
-            "segments": [gen],
-            "n": n,
-            "num_hashes": num_hashes,
-            "bands": bands,
-            # hash-family version: a store whose signatures were built
-            # under a different prime (the r12 family fix) must re-index,
-            # not serve stale band keys — validate() checks this
-            "prime": _dd.MINHASH_PRIME,
-            "id_col": id_col,
-            "text_col": text_col,
-            "n_rows": n_rows,
-            "fingerprint": fingerprint,
-        }
-        self._commit(name, desc)
-        return desc
+            shingled.unpersist()
 
     def read_minhash(self, name: str = "minhash") -> tuple[dict, DataFrame, DataFrame]:
         """(descriptor, band table, shingle table) for a committed index."""
-        desc = self._descriptor(name, "minhash")
-        return (
-            desc,
-            self._read_table(name, desc, "bands"),
-            self._read_table(name, desc, "shingles"),
-        )
+        return self._read(name, "minhash")
 
     def minhash_pairs(
         self, name: str = "minhash", threshold: float = 0.4
@@ -917,34 +930,14 @@ class AnnIndexStore:
         double-counts the re-sent documents' shingles (it never corrupts
         committed segments); leave False unless the source guarantees
         disjointness."""
-        desc = self._descriptor(name, "minhash")
-        if "segments" not in desc:
-            return self.write_minhash(
-                docs, name=name, id_col=desc["id_col"],
-                text_col=desc.get("text_col", "text"), n=int(desc["n"]),
-                num_hashes=int(desc["num_hashes"]), bands=int(desc["bands"]),
-                fingerprint=fingerprint,
-            )
-        id_col = desc["id_col"]
-        if assume_new:
-            fresh = docs
-        else:
-            shingled_old = self._read_table(name, desc, "shingles")
-            fresh = docs.join(
-                shingled_old.select(id_col), id_col, "left_anti"
-            )
-        if not assume_new and fresh.isEmpty():
-            # assume_new callers promise non-empty disjoint batches, so the
-            # emptiness probe job is skipped; a violated promise stages an
-            # empty segment (one burned gen), never corrupts committed ones
-            return desc
         caches: list = []
-        stacked, shingles = self._minhash_tables(
-            fresh, id_col, desc.get("text_col", "text"), int(desc["n"]),
-            int(desc["num_hashes"]), int(desc["bands"]), caches=caches,
-        )
-        gen = self._reserve_gen()
-        try:
+
+        def encode(desc, fresh, _frozen):
+            stacked, shingles, shingled = self._minhash_tables(
+                fresh, desc["id_col"], desc.get("text_col", "text"),
+                int(desc["n"]), int(desc["num_hashes"]), int(desc["bands"]),
+            )
+            caches.append(shingled)
             # materialize the shingle cache at full parallelism FIRST,
             # then write a SMALL delta as one file each: a streaming
             # micro-batch is delta-sized, and a chain of many-small-file
@@ -952,30 +945,17 @@ class AnnIndexStore:
             # large daily-ingest delta keeps its write parallelism (one
             # funneled task would serialize the whole delta) and pays the
             # extra files instead
-            n_new = caches[0].count() if caches else None
-            one = n_new is not None and n_new <= SINGLE_FILE_APPEND_ROWS
-            self._stage(
-                stacked.coalesce(1) if one else stacked,
-                name, "bands", gen, count=False,
+            if shingled.count() <= SINGLE_FILE_APPEND_ROWS:
+                stacked, shingles = stacked.coalesce(1), shingles.coalesce(1)
+            return {"bands": stacked, "shingles": shingles}
+
+        try:
+            return self._append(
+                name, "minhash", docs, fingerprint, assume_new, encode
             )
-            self._stage(
-                shingles.coalesce(1) if one else shingles,
-                name, "shingles", gen, count=n_new is None,
-            )
-        finally:
+        finally:  # staging is eager — safe to release
             for c in caches:
                 c.unpersist()
-        new_desc = dict(desc)
-        new_desc.update(
-            {
-                "gen": gen,
-                "segments": self._segments(desc) + [gen],
-                "n_rows": int(desc["n_rows"]) + n_new,
-                "fingerprint": fingerprint or desc.get("fingerprint"),
-            }
-        )
-        self._commit(name, new_desc)
-        return new_desc
 
     # ------------------------------------------------------------------- IVF
     def write_ivf(
@@ -1002,50 +982,22 @@ class AnnIndexStore:
         SQL-replayable: stride = greatest(1, ceil(n / ceil(sqrt(n)))),
         centroids = rows with id % stride = 0 (a broadcast 1-row count,
         no driver job)."""
-        from helixdb_spark.operators.similarity import (
-            assign_nearest_centroid,
-            sqrt_stride_centroids,
-        )
-
         if centroids is None:
             if stride == "sqrt":
-                centroids = sqrt_stride_centroids(corpus, id_col, vec_col)
+                centroids = sim.sqrt_stride_centroids(corpus, id_col, vec_col)
             else:
-                centroids = corpus.where((F.col(id_col) % stride) == 0).select(
-                    F.col(id_col).alias("centroid_id"),
-                    F.col(vec_col).alias("_cvec"),
-                )
-        assigned = assign_nearest_centroid(
+                centroids = _stride_centroids(corpus, stride, id_col, vec_col)
+        assigned = sim.assign_nearest_centroid(
             spread(corpus), centroids, vec_col, id_col
         )
-        gen = self._reserve_gen()
-        n_rows = self._stage(assigned, name, "lists", gen, "centroid_id")
-        self._stage(centroids, name, "centroids", gen)
-        cnts = self._list_counts_readback(name, gen, n_rows)
-        desc = {
-            "kind": "ivf",
-            "gen": gen,
-            "segments": [gen],
-            "stride": stride,
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "n_rows": n_rows,
-            "fingerprint": fingerprint,
-        }
-        if cnts is not None:
-            desc["list_counts"] = {
-                str(gen): {str(c): n for c, n in cnts.items()}
-            }
-        self._commit(name, desc)
-        return desc
+        return self._write(
+            name, "ivf", {"lists": assigned, "centroids": centroids},
+            {"stride": stride, "id_col": id_col, "vec_col": vec_col},
+            fingerprint,
+        )
 
     def read_ivf(self, name: str = "ivf") -> tuple[dict, DataFrame, DataFrame]:
-        desc = self._descriptor(name, "ivf")
-        return (
-            desc,
-            self._read_table(name, desc, "lists"),
-            self._read_table(name, desc, "centroids"),
-        )
+        return self._read(name, "ivf")
 
     def ivf_topk(
         self,
@@ -1058,10 +1010,8 @@ class AnnIndexStore:
         similarity.ivf_probe_topk with the in-session path, so results are
         bit-identical to a fresh build; the centroid_id filter prunes all
         other lists' partitions at the scan."""
-        from helixdb_spark.operators.similarity import ivf_probe_topk
-
         desc, assigned, centroids = self.read_ivf(name)
-        return ivf_probe_topk(
+        return sim.ivf_probe_topk(
             assigned,
             centroids,
             queries,
@@ -1083,18 +1033,13 @@ class AnnIndexStore:
         nearest lists' partitions (still partition pruning — just a
         probes-per-query-row IN-set) — the recall/cost knob production IVF
         deployments tune. Shares similarity.ivf_multiprobe_topk."""
-        from helixdb_spark.operators.similarity import (
-            IVF_N_PROBE,
-            ivf_multiprobe_topk,
-        )
-
         desc, assigned, centroids = self.read_ivf(name)
-        return ivf_multiprobe_topk(
+        return sim.ivf_multiprobe_topk(
             assigned,
             centroids,
             queries,
             k,
-            n_probe=IVF_N_PROBE if n_probe is None else n_probe,
+            n_probe=sim.IVF_N_PROBE if n_probe is None else n_probe,
             id_col=desc["id_col"],
             vec_col=desc["vec_col"],
             query_id_col=query_id_col,
@@ -1119,57 +1064,14 @@ class AnnIndexStore:
         committed LISTS table is then never opened (descriptor-only read
         skips its per-segment file-listing jobs — only the small centroids
         table, which the assignment genuinely needs, is read)."""
-        from helixdb_spark.operators.similarity import assign_nearest_centroid
+        def encode(desc, fresh, frozen):
+            return {"lists": sim.assign_nearest_centroid(
+                fresh, frozen["centroids"], desc["vec_col"], desc["id_col"]
+            )}
 
-        desc = self._descriptor(name, "ivf")
-        centroids = self._read_table(name, desc, "centroids")
-        if "segments" not in desc:
-            return self.write_ivf(
-                corpus, name=name, stride=int(desc["stride"]),
-                id_col=desc["id_col"], vec_col=desc["vec_col"],
-                centroids=centroids, fingerprint=fingerprint,
-            )
-        id_col = desc["id_col"]
-        if assume_new:
-            fresh = spread(corpus)
-        else:
-            assigned_old = self._read_table(name, desc, "lists")
-            fresh = spread(corpus).join(
-                assigned_old.select(id_col), id_col, "left_anti"
-            )
-        if not assume_new and fresh.isEmpty():
-            # assume_new callers promise non-empty disjoint batches, so the
-            # emptiness probe job is skipped; a violated promise stages an
-            # empty segment (one burned gen), never corrupts committed ones
-            return desc
-        staged = assign_nearest_centroid(
-            fresh, centroids, desc["vec_col"], id_col
+        return self._append(
+            name, "ivf", spread(corpus), fingerprint, assume_new, encode
         )
-        gen = self._reserve_gen()
-        n_new = self._stage(staged, name, "lists", gen, "centroid_id")
-        new_desc = dict(desc)
-        new_desc.update(
-            {
-                "gen": gen,
-                "segments": self._segments(desc) + [gen],
-                "n_rows": int(desc["n_rows"]) + n_new,
-                "fingerprint": fingerprint or desc.get("fingerprint"),
-            }
-        )
-        old_lc = desc.get("list_counts")
-        cnts = (
-            self._list_counts_readback(name, gen, n_new)
-            if old_lc is not None
-            else None
-        )
-        if old_lc is not None and cnts is not None:
-            lc = dict(old_lc)
-            lc[str(gen)] = {str(c): n for c, n in cnts.items()}
-            new_desc["list_counts"] = lc
-        else:
-            new_desc.pop("list_counts", None)
-        self._commit(name, new_desc)
-        return new_desc
 
     # --------------------------------------------------------------- IVFPQ
     def write_ivfpq(
@@ -1194,69 +1096,31 @@ class AnnIndexStore:
         double pruning (list partition + no raw vectors) that makes this
         the 100 TB ANN layout. ``centroids``/``prefit`` freeze the
         quantizers for rebuild/append bit-identity checks."""
-        from helixdb_spark.operators.similarity import (
-            ivfpq_encode_codes,
-            ivfpq_residuals_from,
-            pq_fit_codebooks,
-        )
-
         if centroids is None:
-            centroids = corpus.where((F.col(id_col) % stride) == 0).select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("_cvec"),
-            )
-        resid = ivfpq_residuals_from(
+            centroids = _stride_centroids(corpus, stride, id_col, vec_col)
+        resid = sim.ivfpq_residuals_from(
             corpus, centroids, id_col, vec_col
         ).persist()  # fit rounds + the encode stage all re-read it
         try:
             codebooks, sub_d = prefit or pq_fit_codebooks(
                 resid, m, k, n_iter, id_col, "_rv"
             )
-            gen = self._reserve_gen()
-            n_rows = self._stage(
-                ivfpq_encode_codes(resid, codebooks, sub_d, m, id_col),
-                name, "lists", gen, "centroid_id",
+            lists = sim.ivfpq_encode_codes(resid, codebooks, sub_d, m, id_col)
+            return self._write(
+                name, "ivfpq", {"lists": lists, "centroids": centroids}, {
+                    "stride": stride, "m": m, "k": k, "n_iter": n_iter,
+                    "sub_d": sub_d, "id_col": id_col, "vec_col": vec_col,
+                    "codebooks": self._codebooks_json(codebooks),
+                }, fingerprint,
             )
         finally:  # staging is eager — safe to release
             resid.unpersist()
-        self._stage(centroids, name, "centroids", gen)
-        desc = {
-            "kind": "ivfpq",
-            "gen": gen,
-            "segments": [gen],
-            "stride": stride,
-            "m": m,
-            "k": k,
-            "n_iter": n_iter,
-            "sub_d": sub_d,
-            "id_col": id_col,
-            "vec_col": vec_col,
-            "n_rows": n_rows,
-            "fingerprint": fingerprint,
-            # JSON round-trips doubles exactly (repr-based)
-            "codebooks": [
-                [[int(cid), [float(x) for x in cv]] for cid, cv in book]
-                for book in codebooks
-            ],
-        }
-        self._commit(name, desc)
-        return desc
 
     def read_ivfpq(
         self, name: str = "ivfpq"
     ) -> tuple[dict, list, int, DataFrame, DataFrame]:
-        desc = self._descriptor(name, "ivfpq")
-        codebooks = [
-            [(int(cid), [float(x) for x in cv]) for cid, cv in book]
-            for book in desc["codebooks"]
-        ]
-        return (
-            desc,
-            codebooks,
-            int(desc["sub_d"]),
-            self._read_table(name, desc, "lists"),
-            self._read_table(name, desc, "centroids"),
-        )
+        desc, lists, centroids = self._read(name, "ivfpq")
+        return desc, self._codebooks(desc), int(desc["sub_d"]), lists, centroids
 
     def ivfpq_adc_topk(
         self,
@@ -1269,10 +1133,8 @@ class AnnIndexStore:
         similarity.ivfpq_adc_from_codes with the in-session path, so
         results are bit-identical to a fresh build; the routing join's
         centroid_id filter prunes all other lists' partitions."""
-        from helixdb_spark.operators.similarity import ivfpq_adc_from_codes
-
         desc, codebooks, sub_d, codes, centroids = self.read_ivfpq(name)
-        return ivfpq_adc_from_codes(
+        return sim.ivfpq_adc_from_codes(
             codes,
             centroids,
             queries,
@@ -1296,37 +1158,19 @@ class AnnIndexStore:
         an ingest delta is assign → residual-ize → encode into a fresh
         lists segment — O(delta), existing segments untouched, and
         bit-identical to a full rebuild under the same frozen state."""
-        from helixdb_spark.operators.similarity import (
-            ivfpq_encode_codes,
-            ivfpq_residuals_from,
-        )
+        def encode(desc, fresh, frozen):
+            id_col = desc["id_col"]
+            resid = sim.ivfpq_residuals_from(
+                fresh, frozen["centroids"], id_col, desc["vec_col"]
+            )
+            return {"lists": sim.ivfpq_encode_codes(
+                resid, self._codebooks(desc), int(desc["sub_d"]),
+                int(desc["m"]), id_col,
+            )}
 
-        desc, codebooks, sub_d, codes, centroids = self.read_ivfpq(name)
-        id_col, m = desc["id_col"], int(desc["m"])
-        fresh = spread(corpus).join(
-            codes.select(id_col), id_col, "left_anti"
+        return self._append(
+            name, "ivfpq", spread(corpus), fingerprint, False, encode
         )
-        if fresh.isEmpty():  # nothing new: no generation burned
-            return desc
-        resid = ivfpq_residuals_from(
-            fresh, centroids, id_col, desc["vec_col"]
-        )
-        gen = self._reserve_gen()
-        n_new = self._stage(
-            ivfpq_encode_codes(resid, codebooks, sub_d, m, id_col),
-            name, "lists", gen, "centroid_id",
-        )
-        new_desc = dict(desc)
-        new_desc.update(
-            {
-                "gen": gen,
-                "segments": self._segments(desc) + [gen],
-                "n_rows": int(desc["n_rows"]) + n_new,
-                "fingerprint": fingerprint or desc.get("fingerprint"),
-            }
-        )
-        self._commit(name, new_desc)
-        return new_desc
 
     # ------------------------------------------------------------ compaction
     def ivf_assignment_stats(self, name: str = "ivf") -> DataFrame:
@@ -1350,14 +1194,9 @@ class AnnIndexStore:
 
         desc = self._descriptor(name, "ivf")
         segs = self._segments(desc)
-        if "segments" not in desc:
-            lists = self.spark.read.parquet(
-                f"{self._gen_path(name, desc['gen'])}/lists"
-            ).withColumn("seg", F.lit(int(desc["gen"])))
-        else:
-            lists = self.spark.read.parquet(
-                self._table_root(name, "lists")
-            ).where(F.col("seg").isin(segs))
+        lists = self.spark.read.parquet(
+            self._table_root(name, "lists")
+        ).where(F.col("seg").isin(segs))
         centroids = self._read_table(name, desc, "centroids")
         idx = F.array(*[F.lit(int(s)) for s in segs])
         cs = F.round(
@@ -1402,95 +1241,36 @@ class AnnIndexStore:
         counts of two segments — served from the descriptor's
         ``list_counts`` metadata recorded at write time (r12: no scan at
         all), falling back to one map-side-combined scan of the lists
-        table's (seg, centroid_id) pairs for legacy or over-cap indexes —
-        no vectors, no truth tier either way.
+        table's (seg, centroid_id) pairs for over-cap indexes — no
+        vectors, no truth tier either way.
 
-        Returns ONE row ``(n_fit, n_newest, share_drift)``; 0.0 when the
-        chain has no appended segment yet. Shares quantize to 1e-9
-        fixed-point before the |p-q| sum (exact-sum discipline: the TV is
-        a sum of int64s, partition-order independent, ±0.5e-9 per list
-        quantization error)."""
+        Returns ONE row ``(n_fit, n_newest, share_drift)``: the fit and
+        newest rows of ``ivf_share_drift_by_segment``, so an empty newest
+        segment reads 0.0 here too. 0.0 when the chain has no appended
+        segment yet. Shares quantize to 1e-9 fixed-point before the |p-q|
+        sum (exact-sum discipline: the TV is a sum of int64s,
+        partition-order independent, ±0.5e-9 per list quantization
+        error)."""
         desc = self._descriptor(name, "ivf")
         segs = self._segments(desc)
+        schema = "n_fit long, n_newest long, share_drift double"
         if len(segs) <= 1:
-            return self._local_df(
-                [(int(desc["n_rows"]), 0, 0.0)],
-                "n_fit long, n_newest long, share_drift double",
-            )
+            return self._local_df([(int(desc["n_rows"]), 0, 0.0)], schema)
+        last = len(segs) - 1
         meta = self._list_counts_meta(desc)
         if meta is not None:
-            # zero-JOB path (r12): the per-(segment, list) counts were
-            # recorded at write time, and the whole statistic is integer
-            # sums plus the two fixed-point helpers, so it runs on the
-            # driver — ``_share_fp``/``_round6`` mirror the Spark
-            # expressions of the scan fallback bit-for-bit (pinned by
-            # test_ivf_drift_meta_path_matches_scan_path and the
-            # randomized cross-check in tests/test_round12_ops.py); only
-            # the one-row result becomes a DataFrame. The full outer join
-            # on centroid_id is the dict union below; sums over the union
-            # equal sums over each dict (missing keys contribute 0).
-            fitc, newc = meta[segs[0]], meta[segs[-1]]
-            lists_union = set(fitc) | set(newc)
-            schema = "n_fit long, n_newest long, share_drift double"
-            if not lists_union:
-                # the scan path's final groupBy over an empty relation
-                # yields zero rows — preserve that degenerate shape
-                return self._local_df([], schema)
-            tf, tn = sum(fitc.values()), sum(newc.values())
-            sd = sum(
-                abs(
-                    self._share_fp(fitc.get(c, 0), tf)
-                    - self._share_fp(newc.get(c, 0), tn)
-                )
-                for c in lists_union
-            )
-            return self._local_df(
-                [(tf, tn, self._round6(1e-9 + sd / 2e9))], schema
-            )
-        else:
-            lists = self.spark.read.parquet(self._table_root(name, "lists"))
-            counts = (
-                lists.where(F.col("seg").isin([segs[0], segs[-1]]))
-                .groupBy("seg", "centroid_id")
-                .agg(F.count("*").alias("_n"))
-            )
-            fit = counts.where(F.col("seg") == segs[0]).select(
-                "centroid_id", F.col("_n").alias("_nf")
-            )
-            new = counts.where(F.col("seg") == segs[-1]).select(
-                "centroid_id", F.col("_n").alias("_nn")
-            )
-            j = (
-                fit.join(new, "centroid_id", "full")
-                .select(
-                    F.coalesce("_nf", F.lit(0)).alias("_nf"),
-                    F.coalesce("_nn", F.lit(0)).alias("_nn"),
-                )
-            )
-        tot = j.agg(
-            F.sum("_nf").alias("_tf"), F.sum("_nn").alias("_tn")
+            series = self._drift_rows_meta(segs, meta)
+            fit, newest = series[0], series[-1]
+            rows = [(fit[1] or 0, *newest[1:])] if newest[0] == last else []
+            return self._local_df(rows, schema)
+        series = self._drift_rows_scan(name, segs)
+        fit = series.where(F.col("segment_idx") == 0).select(
+            F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_fit")
         )
-        share_fp = lambda n, t: F.when(  # noqa: E731 — local fixed-point
-            t > 0,
-            F.round(F.lit(1e-9) + n.cast("double") / t * 1e9, 0).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        per = j.crossJoin(F.broadcast(tot)).select(
-            "_tf",
-            "_tn",
-            F.abs(
-                share_fp(F.col("_nf"), F.col("_tf"))
-                - share_fp(F.col("_nn"), F.col("_tn"))
-            ).alias("_d"),
+        newest = series.where(F.col("segment_idx") == last).select(
+            F.col("n_rows").alias("n_newest"), "share_drift"
         )
-        return per.groupBy("_tf", "_tn").agg(
-            F.sum("_d").alias("_sd")
-        ).select(
-            F.col("_tf").alias("n_fit"),
-            F.col("_tn").alias("n_newest"),
-            (
-                F.round(F.lit(1e-9) + F.col("_sd") / 2e9, 6) + F.lit(0.0)
-            ).alias("share_drift"),
-        )
+        return fit.crossJoin(newest)
 
     def ivf_share_drift_by_segment(self, name: str = "ivf") -> DataFrame:
         """``ivf_share_drift`` for EVERY segment of the chain — the drift
@@ -1504,96 +1284,93 @@ class AnnIndexStore:
         Returns (segment_idx, n_rows, share_drift) ordered by segment."""
         desc = self._descriptor(name, "ivf")
         segs = self._segments(desc)
+        schema = "segment_idx int, n_rows long, share_drift double"
         if len(segs) <= 1:
-            return self._local_df(
-                [(0, int(desc["n_rows"]), 0.0)],
-                "segment_idx int, n_rows long, share_drift double",
-            )
+            return self._local_df([(0, int(desc["n_rows"]), 0.0)], schema)
         meta = self._list_counts_meta(desc)
         if meta is not None:
-            # zero-JOB path (r12): counts recorded at write time replace
-            # the lists-table scan, and the whole series is computed on
-            # the driver with the ``_share_fp``/``_round6`` twins of the
-            # scan path's Spark expressions (bit-identical; pinned by
-            # test_ivf_drift_meta_path_matches_scan_path). The
-            # descriptor-driven grid semantics (empty appends stay
-            # visible) are preserved: each segment contributes the union
-            # of its lists and the fit's; a segment whose union with the
-            # fit is EMPTY has no per-list rows and (exactly like the
-            # scan path's groupBy) no drift row.
-            fitc = meta[segs[0]]
-            tf = sum(fitc.values())
-            out_rows = [(0, tf if fitc else None, 0.0)]
-            for i in range(1, len(segs)):
-                segc = meta[segs[i]]
-                union = set(fitc) | set(segc)
-                if not union:
-                    continue
-                tn = sum(segc.values())
-                sd = sum(
-                    abs(
-                        self._share_fp(fitc.get(c, 0), tf)
-                        - self._share_fp(segc.get(c, 0), tn)
-                    )
-                    for c in union
+            return self._local_df(self._drift_rows_meta(segs, meta), schema)
+        return self._drift_rows_scan(name, segs).orderBy("segment_idx")
+
+    def _drift_rows_meta(self, segs: list, meta: dict) -> list:
+        """Zero-JOB drift series (r12): the per-(segment, list) counts
+        recorded at write time replace the lists-table scan, and the
+        series is computed on the driver with the ``_share_fp``/``_round6``
+        twins of ``_drift_rows_scan``'s Spark expressions (bit-identical;
+        pinned by test_ivf_drift_meta_path_matches_scan_path). Each
+        segment contributes the union of its lists and the fit's; a
+        segment whose union with the fit is EMPTY has no per-list rows
+        and (exactly like the scan path's groupBy) no drift row."""
+        fitc = meta[segs[0]]
+        tf = sum(fitc.values())
+        out_rows = [(0, tf if fitc else None, 0.0)]
+        for i in range(1, len(segs)):
+            segc = meta[segs[i]]
+            union = set(fitc) | set(segc)
+            if not union:
+                continue
+            tn = sum(segc.values())
+            sd = sum(
+                abs(
+                    self._share_fp(fitc.get(c, 0), tf)
+                    - self._share_fp(segc.get(c, 0), tn)
                 )
-                out_rows.append(
-                    (
-                        i,
-                        tn,
-                        0.0 if tn == 0 else self._round6(1e-9 + sd / 2e9),
-                    )
-                )
-            return self._local_df(
-                out_rows, "segment_idx int, n_rows long, share_drift double"
+                for c in union
             )
-        else:
-            lists = self.spark.read.parquet(self._table_root(name, "lists"))
-            idx = F.array(*[F.lit(int(s)) for s in segs])
-            counts = (
-                lists.where(F.col("seg").isin(segs))
-                .groupBy("seg", "centroid_id")
-                .agg(F.count("*").alias("_n"))
-                .select(
-                    (F.array_position(idx, F.col("seg")) - 1)
-                    .cast("int")
-                    .alias("segment_idx"),
-                    "centroid_id",
-                    "_n",
-                )
+            out_rows.append(
+                (i, tn, 0.0 if tn == 0 else self._round6(1e-9 + sd / 2e9))
             )
-            fit = counts.where(F.col("segment_idx") == 0).select(
-                "centroid_id", F.col("_n").alias("_nf")
+        return out_rows
+
+    def _drift_rows_scan(self, name: str, segs: list) -> DataFrame:
+        """The drift series from one map-side-combined scan of the lists
+        table's (seg, centroid_id) pairs, unordered."""
+        lists = self.spark.read.parquet(self._table_root(name, "lists"))
+        idx = F.array(*[F.lit(int(s)) for s in segs])
+        counts = (
+            lists.where(F.col("seg").isin(segs))
+            .groupBy("seg", "centroid_id")
+            .agg(F.count("*").alias("_n"))
+            .select(
+                (F.array_position(idx, F.col("seg")) - 1)
+                .cast("int")
+                .alias("segment_idx"),
+                "centroid_id",
+                "_n",
             )
-            # full outer per segment: lists hit by only one side count
-            # fully. Segment ids come from the DESCRIPTOR, not from
-            # observed list rows — an empty append (zero rows) has no list
-            # rows, and deriving the grid from rows would silently drop
-            # exactly the segment where ingest stalled from the drift
-            # series.
-            others = counts.where(F.col("segment_idx") > 0)
-            seg_ids = self._local_df(
-                [(i,) for i in range(1, len(segs))], "segment_idx int"
-            )
-            grid = seg_ids.crossJoin(F.broadcast(fit)).select(
-                "segment_idx", "centroid_id", "_nf"
-            )
-            j = grid.join(
-                others.select(
-                    "segment_idx", "centroid_id", F.col("_n").alias("_nn")
-                ),
-                ["segment_idx", "centroid_id"],
-                "full",
-            ).select(
-                "segment_idx",
-                F.coalesce("_nf", F.lit(0)).alias("_nf"),
-                F.coalesce("_nn", F.lit(0)).alias("_nn"),
-            )
-            fit_row = fit.agg(F.sum("_nf").alias("n_rows")).select(
-                F.lit(0).cast("int").alias("segment_idx"),
-                F.col("n_rows").cast("long"),
-                F.lit(0.0).alias("share_drift"),
-            )
+        )
+        fit = counts.where(F.col("segment_idx") == 0).select(
+            "centroid_id", F.col("_n").alias("_nf")
+        )
+        # full outer per segment: lists hit by only one side count
+        # fully. Segment ids come from the DESCRIPTOR, not from
+        # observed list rows — an empty append (zero rows) has no list
+        # rows, and deriving the grid from rows would silently drop
+        # exactly the segment where ingest stalled from the drift
+        # series.
+        others = counts.where(F.col("segment_idx") > 0)
+        seg_ids = self._local_df(
+            [(i,) for i in range(1, len(segs))], "segment_idx int"
+        )
+        grid = seg_ids.crossJoin(F.broadcast(fit)).select(
+            "segment_idx", "centroid_id", "_nf"
+        )
+        j = grid.join(
+            others.select(
+                "segment_idx", "centroid_id", F.col("_n").alias("_nn")
+            ),
+            ["segment_idx", "centroid_id"],
+            "full",
+        ).select(
+            "segment_idx",
+            F.coalesce("_nf", F.lit(0)).alias("_nf"),
+            F.coalesce("_nn", F.lit(0)).alias("_nn"),
+        )
+        fit_row = fit.agg(F.sum("_nf").alias("n_rows")).select(
+            F.lit(0).cast("int").alias("segment_idx"),
+            F.col("n_rows").cast("long"),
+            F.lit(0.0).alias("share_drift"),
+        )
         tot = j.groupBy("segment_idx").agg(
             F.sum("_nf").alias("_tf"), F.sum("_nn").alias("_tn")
         )
@@ -1623,7 +1400,7 @@ class AnnIndexStore:
             )
             .alias("share_drift"),
         )
-        return fit_row.unionByName(drifts).orderBy("segment_idx")
+        return fit_row.unionByName(drifts)
 
     def compact_index(self, name: str) -> dict:
         """Fold a segment chain back into ONE segment — the small-file /
@@ -1635,26 +1412,23 @@ class AnnIndexStore:
         desc = self._state["indexes"].get(name)
         if desc is None:
             raise KeyError(f"no index named {name!r} at {self.base}")
-        if len(self._segments(desc)) <= 1 and "segments" in desc:
+        if len(self._segments(desc)) <= 1:
             return desc
-        kind = desc["kind"]
         tables = {
-            t: self._read_table(name, desc, t) for t in KIND_TABLES[kind]
+            t: self._read_table(name, desc, t)
+            for t in _KINDS[desc["kind"]].tables
         }
         gen = self._reserve_gen()
-        part_by = {"buckets": "_bucket", "lists": "centroid_id"}
-        for t, df in tables.items():
-            self._stage(df, name, t, gen, part_by.get(t))
+        self._stage_segment(name, desc["kind"], tables, gen)
         new_desc = dict(desc)
         new_desc.update({"gen": gen, "segments": [gen]})
-        meta = self._list_counts_meta(desc) if kind == "ivf" else None
+        meta = self._list_counts_meta(desc)
         if meta is not None:
             # a fold is a pure rewrite: the merged segment's per-list
             # counts are the exact integer sums of the folded ones
-            merged: dict[int, int] = {}
+            merged: Counter = Counter()
             for seg_counts in meta.values():
-                for c, n in seg_counts.items():
-                    merged[c] = merged.get(c, 0) + n
+                merged.update(seg_counts)
             new_desc["list_counts"] = {
                 str(gen): {str(c): n for c, n in merged.items()}
             }

@@ -2973,9 +2973,6 @@ ORACLES.update({"decontaminate_semantic": _sem_decon_sql()})
 # fit. At 100 TB this converts the dominant fit/encode cost from per-session
 # to per-corpus-version.
 
-_ANN_STORE_MEMO: dict[str, str] = {}
-
-
 def _store_base(sf_dir: str) -> str:
     import hashlib as _h
 
@@ -2992,30 +2989,53 @@ def _source_fp(sf_dir: str, table: str) -> str:
     return source_fingerprint(f"{sf_dir.rstrip('/')}/{table}.parquet")
 
 
-def _ann_store(spark: SparkSession, sf_dir: str):
-    """Open (building if absent or stale) the persisted ANN store for
-    ``sf_dir``. The build writes BOTH index kinds; the memo only skips the
-    staleness re-validation inside one process."""
+# (store base, index names, source fingerprints) this process validated
+_STORE_MEMO: set[tuple] = set()
+
+
+def _open_store(
+    spark: SparkSession, sf_dir: str, suffix: str, indexes, tables, build
+):
+    """The persisted index store at ``_store_base(sf_dir) + suffix``,
+    reopened off disk. ``build(store)`` validates the named ``indexes``
+    and (re)builds the stale or missing ones; it runs once per process for
+    each content fingerprint of the indexed source ``tables`` (a
+    driver-side stat walk, no Spark job), so a regenerated corpus is
+    re-validated. Several rows keep different indexes in one store, so the
+    index names are part of the memo key."""
     from helixdb_spark.index_store import AnnIndexStore
 
-    base = _store_base(sf_dir)
-    store = AnnIndexStore(spark, base)
-    if _ANN_STORE_MEMO.get(sf_dir) == base:
-        return store
-    emb = load_table(spark, sf_dir, "embeddings")
-    fp = _source_fp(sf_dir, "embeddings")
-    if not (
-        store.validate("pq", emb, fingerprint=fp)
-        and store.validate("lsh", emb, fingerprint=fp)
-    ):
-        store.write_pq(emb, prefit=_pq_prefit(spark, sf_dir), fingerprint=fp)
-        store.write_lsh(emb, fingerprint=fp)
-    if not store.validate("ivfpq", emb, fingerprint=fp):
-        store.write_ivfpq(
-            emb, prefit=_ivfpq_prefit(spark, sf_dir), fingerprint=fp
-        )
-    _ANN_STORE_MEMO[sf_dir] = base
-    return store
+    base = _store_base(sf_dir) + suffix
+    key = (base, indexes, *(_source_fp(sf_dir, t) for t in tables))
+    if key not in _STORE_MEMO:
+        build(AnnIndexStore(spark, base))
+        _STORE_MEMO.add(key)
+    return AnnIndexStore(spark, base)
+
+
+def _ann_store(spark: SparkSession, sf_dir: str):
+    """Open (building if absent or stale) the persisted ANN store for
+    ``sf_dir``: PQ, LSH and IVFADC indexes over the embeddings."""
+
+    def build(store):
+        emb = load_table(spark, sf_dir, "embeddings")
+        fp = _source_fp(sf_dir, "embeddings")
+        if not (
+            store.validate("pq", emb, fingerprint=fp)
+            and store.validate("lsh", emb, fingerprint=fp)
+        ):
+            store.write_pq(
+                emb, prefit=_pq_prefit(spark, sf_dir), fingerprint=fp
+            )
+            store.write_lsh(emb, fingerprint=fp)
+        if not store.validate("ivfpq", emb, fingerprint=fp):
+            store.write_ivfpq(
+                emb, prefit=_ivfpq_prefit(spark, sf_dir), fingerprint=fp
+            )
+
+    return _open_store(
+        spark, sf_dir, "", ("pq", "lsh", "ivfpq"), ("embeddings",), build
+    )
 
 
 def ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3243,22 +3263,18 @@ def dedup_minhash_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus version here; a re-run of the pair scan touches neither raw
     text nor md5 again. Same oracle as dedup_minhash_lsh — the reopened
     index must answer bit-identically."""
-    from helixdb_spark.index_store import AnnIndexStore
-
-    base = _store_base(sf_dir)
-    store = AnnIndexStore(spark, base)
     docs = load_table(spark, sf_dir, "documents")
     fp = _source_fp(sf_dir, "documents")
-    if _MINHASH_MEMO.get(sf_dir) != base and not store.validate(
-        "minhash", docs, fingerprint=fp
-    ):
-        store.write_minhash(docs, fingerprint=fp)
-        store = AnnIndexStore(spark, base)  # reopen: answer off disk
-    _MINHASH_MEMO[sf_dir] = base
+
+    def build(store):
+        if not store.validate("minhash", docs, fingerprint=fp):
+            store.write_minhash(docs, fingerprint=fp)
+
+    store = _open_store(
+        spark, sf_dir, "", ("minhash",), ("documents",), build
+    )
     return store.minhash_pairs(threshold=JACCARD_THRESHOLD)
 
-
-_MINHASH_MEMO: dict[str, str] = {}
 
 QUERIES.update({"dedup_minhash_persisted": dedup_minhash_persisted})
 ORACLES.update({"dedup_minhash_persisted": _minhash_sql()})
@@ -3400,22 +3416,16 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored partitionBy(centroid_id), so the probe reads exactly one
     list's files — completing the persisted-index family (PQ, LSH,
     MinHash, IVF). Same oracle as ann_ivf_topk."""
-    from helixdb_spark.index_store import AnnIndexStore
-
-    base = _store_base(sf_dir)
-    store = AnnIndexStore(spark, base)
     emb = load_table(spark, sf_dir, "embeddings")
     fp = _source_fp(sf_dir, "embeddings")
-    if _IVF_MEMO.get(sf_dir) != base and not store.validate(
-        "ivf", emb, fingerprint=fp
-    ):
-        store.write_ivf(emb, fingerprint=fp)
-        store = AnnIndexStore(spark, base)  # reopen: answer off disk
-    _IVF_MEMO[sf_dir] = base
+
+    def build(store):
+        if not store.validate("ivf", emb, fingerprint=fp):
+            store.write_ivf(emb, fingerprint=fp)
+
+    store = _open_store(spark, sf_dir, "", ("ivf",), ("embeddings",), build)
     return store.ivf_topk(_query_vecs(spark, sf_dir), k=ANN_K)
 
-
-_IVF_MEMO: dict[str, str] = {}
 
 QUERIES.update({"ann_ivf_persisted": ann_ivf_persisted})
 ORACLES.update({"ann_ivf_persisted": ANN_IVF_SQL})
@@ -3779,64 +3789,60 @@ ORACLES.update({"text_length_profile": _length_profile_sql()})
 # analog: new data folded into per-level indexes at compaction
 # (src/file/sstable.rs:94-143 driven by src/level.rs:430-447).
 
-_APP_STORE_MEMO: dict[str, str] = {}
-
-
 def _appended_store(spark: SparkSession, sf_dir: str):
     """Open (building if absent or stale) the appended-index store: every
     index committed as base-subset + appended delta segments."""
-    from helixdb_spark.index_store import AnnIndexStore
 
-    base = _store_base(sf_dir) + "_app"
-    store = AnnIndexStore(spark, base)
-    if _APP_STORE_MEMO.get(sf_dir) == base:
-        return store
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents")
-    fpe = _source_fp(sf_dir, "embeddings")
-    fpd = _source_fp(sf_dir, "documents")
-    old_emb = emb.where(F.col("vec_id") % 3 != 0)
-    if not store.validate("pq", emb, fingerprint=fpe):
-        # codebooks prefit on the FULL corpus (the session memo the
-        # non-appended rows share), so frozen-state append == full rebuild
-        store.write_pq(
-            old_emb, prefit=_pq_prefit(spark, sf_dir), fingerprint=fpe
-        )
-        store.append_pq(emb, fingerprint=fpe)
-    if not store.validate("lsh", emb, fingerprint=fpe):
-        store.write_lsh(old_emb, fingerprint=fpe)  # planes corpus-independent
-        store.append_lsh(emb, fingerprint=fpe)
-    if not store.validate("ivf", emb, fingerprint=fpe):
-        # the base subset keeps every stride-row, so the frozen centroid
-        # set equals the full-corpus centroid set and the appended chain
-        # answers exactly like ann_ivf_topk (same oracle)
-        base_ivf = emb.where(
-            (F.col("vec_id") % 3 != 0)
-            | (F.col("vec_id") % _sim.IVF_CENTROID_STRIDE == 0)
-        )
-        store.write_ivf(base_ivf, fingerprint=fpe)
-        store.append_ivf(emb, fingerprint=fpe)
-    if not store.validate("minhash", docs, fingerprint=fpd):
-        store.write_minhash(
-            docs.where(F.col("doc_id") % 4 != 0), fingerprint=fpd
-        )
-        store.append_minhash(docs, fingerprint=fpd)
-    if not store.validate("ivfpq", emb, fingerprint=fpe):
-        # both quantizer levels frozen at full-corpus state: the base
-        # subset keeps every stride row (so the derived centroid set
-        # equals the full-corpus set) and the residual codebooks are the
-        # full-corpus prefit — the appended chain must answer exactly
-        # like ann_ivfpq_topk (same oracle)
-        base_ivfpq = emb.where(
-            (F.col("vec_id") % 3 != 0)
-            | (F.col("vec_id") % _sim.IVF_CENTROID_STRIDE == 0)
-        )
-        store.write_ivfpq(
-            base_ivfpq, prefit=_ivfpq_prefit(spark, sf_dir), fingerprint=fpe
-        )
-        store.append_ivfpq(emb, fingerprint=fpe)
-    _APP_STORE_MEMO[sf_dir] = base
-    return store
+    def build(store):
+        emb = load_table(spark, sf_dir, "embeddings")
+        docs = load_table(spark, sf_dir, "documents")
+        fpe = _source_fp(sf_dir, "embeddings")
+        fpd = _source_fp(sf_dir, "documents")
+        old_emb = emb.where(F.col("vec_id") % 3 != 0)
+        if not store.validate("pq", emb, fingerprint=fpe):
+            # codebooks prefit on the FULL corpus (the session memo the
+            # non-appended rows share), so frozen-state append == full rebuild
+            store.write_pq(
+                old_emb, prefit=_pq_prefit(spark, sf_dir), fingerprint=fpe
+            )
+            store.append_pq(emb, fingerprint=fpe)
+        if not store.validate("lsh", emb, fingerprint=fpe):
+            store.write_lsh(old_emb, fingerprint=fpe)  # planes corpus-independent
+            store.append_lsh(emb, fingerprint=fpe)
+        if not store.validate("ivf", emb, fingerprint=fpe):
+            # the base subset keeps every stride-row, so the frozen centroid
+            # set equals the full-corpus centroid set and the appended chain
+            # answers exactly like ann_ivf_topk (same oracle)
+            base_ivf = emb.where(
+                (F.col("vec_id") % 3 != 0)
+                | (F.col("vec_id") % _sim.IVF_CENTROID_STRIDE == 0)
+            )
+            store.write_ivf(base_ivf, fingerprint=fpe)
+            store.append_ivf(emb, fingerprint=fpe)
+        if not store.validate("minhash", docs, fingerprint=fpd):
+            store.write_minhash(
+                docs.where(F.col("doc_id") % 4 != 0), fingerprint=fpd
+            )
+            store.append_minhash(docs, fingerprint=fpd)
+        if not store.validate("ivfpq", emb, fingerprint=fpe):
+            # both quantizer levels frozen at full-corpus state: the base
+            # subset keeps every stride row (so the derived centroid set
+            # equals the full-corpus set) and the residual codebooks are the
+            # full-corpus prefit — the appended chain must answer exactly
+            # like ann_ivfpq_topk (same oracle)
+            base_ivfpq = emb.where(
+                (F.col("vec_id") % 3 != 0)
+                | (F.col("vec_id") % _sim.IVF_CENTROID_STRIDE == 0)
+            )
+            store.write_ivfpq(
+                base_ivfpq, prefit=_ivfpq_prefit(spark, sf_dir), fingerprint=fpe
+            )
+            store.append_ivfpq(emb, fingerprint=fpe)
+
+    return _open_store(
+        spark, sf_dir, "_app", ("pq", "lsh", "ivf", "minhash", "ivfpq"),
+        ("embeddings", "documents"), build,
+    )
 
 
 def ann_pq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3959,7 +3965,6 @@ ORACLES.update({"dedup_snm_multipass": _snm_multipass_sql()})
 
 
 # ------------------------------ index chain compaction (round 7)
-_CMP_STORE_MEMO: dict[str, str] = {}
 
 
 def ann_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3969,25 +3974,21 @@ def ann_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file axis of a long append chain). A pure rewrite: the probe
     must answer exactly like ann_pq_adc_topk (same oracle), now off a
     single packed segment."""
-    from helixdb_spark.index_store import AnnIndexStore
-
-    base = _store_base(sf_dir) + "_cmp"
-    store = AnnIndexStore(spark, base)
     emb = load_table(spark, sf_dir, "embeddings")
     fp = _source_fp(sf_dir, "embeddings")
-    if _CMP_STORE_MEMO.get(sf_dir) != base and not store.validate(
-        "pq", emb, fingerprint=fp
-    ):
-        store.write_pq(
-            emb.where(F.col("vec_id") % 3 != 0),
-            prefit=_pq_prefit(spark, sf_dir),
-            fingerprint=fp,
-        )
-        store.append_pq(emb, fingerprint=fp)
-        d = store.compact_index("pq")
-        assert len(d["segments"]) == 1
-        store = AnnIndexStore(spark, base)  # reopen: answer off disk
-    _CMP_STORE_MEMO[sf_dir] = base
+
+    def build(store):
+        if not store.validate("pq", emb, fingerprint=fp):
+            store.write_pq(
+                emb.where(F.col("vec_id") % 3 != 0),
+                prefit=_pq_prefit(spark, sf_dir),
+                fingerprint=fp,
+            )
+            store.append_pq(emb, fingerprint=fp)
+            d = store.compact_index("pq")
+            assert len(d["segments"]) == 1
+
+    store = _open_store(spark, sf_dir, "_cmp", ("pq",), ("embeddings",), build)
     return store.pq_adc_topk(_query_vecs(spark, sf_dir), k_nn=ANN_K)
 
 
@@ -4421,9 +4422,7 @@ def ann_pq_chain_autofold(spark: SparkSession, sf_dir: str) -> DataFrame:
             grown["i"] = i
             db.put([(i * 10, b"k%d" % i, b"v%d" % i)])
             db.compact(i * 10, i * 10 + 9)  # ends with _refresh_indexes
-            chain_lengths.append(
-                len(store._segments(store._state["indexes"]["pq"]))
-            )
+            chain_lengths.append(len(store.list_indexes()["pq"]["segments"]))
         db.close()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -4442,8 +4441,6 @@ ORACLES.update({"ann_pq_chain_autofold": _pq_adc_sql()})
 
 # --------------------- frozen-state recall drift audit (round 8)
 DRIFT_ROT = 7  # dimension rotation applied to the ingest delta's vectors
-
-_DRIFT_STORE_MEMO: dict[str, str] = {}
 
 
 def _drift_rotate_spark(col):
@@ -4474,20 +4471,21 @@ def _drift_store(spark: SparkSession, sf_dir: str):
     ``ivf`` = centroids fit on BASE + the rotated delta appended under
     them (the frozen chain); ``ivf_refit`` = centroids fit on the GROWN
     corpus. Returns (store, base, grown)."""
-    from helixdb_spark.index_store import AnnIndexStore
-
-    base_dir = _store_base(sf_dir) + "_drift"
-    store = AnnIndexStore(spark, base_dir)
     base, grown = _drift_corpus(spark, sf_dir)
     fp = _source_fp(sf_dir, "embeddings")
-    if _DRIFT_STORE_MEMO.get(sf_dir) != base_dir and not (
-        store.validate("ivf", grown, fingerprint=fp)
-        and store.validate("ivf_refit", grown, fingerprint=fp)
-    ):
-        store.write_ivf(base, name="ivf", fingerprint=fp)
-        store.append_ivf(grown, name="ivf", fingerprint=fp)
-        store.write_ivf(grown, name="ivf_refit", fingerprint=fp)
-    _DRIFT_STORE_MEMO[sf_dir] = base_dir
+
+    def build(store):
+        if not (
+            store.validate("ivf", grown, fingerprint=fp)
+            and store.validate("ivf_refit", grown, fingerprint=fp)
+        ):
+            store.write_ivf(base, name="ivf", fingerprint=fp)
+            store.append_ivf(grown, name="ivf", fingerprint=fp)
+            store.write_ivf(grown, name="ivf_refit", fingerprint=fp)
+
+    store = _open_store(
+        spark, sf_dir, "_drift", ("ivf", "ivf_refit"), ("embeddings",), build
+    )
     return store, base, grown
 
 
@@ -4978,8 +4976,8 @@ def ann_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         phase["i"] = 1  # same-distribution growth: must NOT trip
         db.put([(5, b"k1", b"v1")])
         db.compact(0, 9)
-        desc = store._state["indexes"]["ivf"]
-        assert len(store._segments(desc)) == 2 and not desc.get("stale"), (
+        desc = store.list_indexes()["ivf"]
+        assert len(desc["segments"]) == 2 and not desc["stale"], (
             "un-shifted append must keep the chain, not trip the policy"
         )
         phase["i"] = 2  # shifted ingest: must trip and re-fit in-pass
@@ -4988,8 +4986,8 @@ def ann_drift_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
         db.close()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    desc = store._state["indexes"]["ivf"]
-    assert len(store._segments(desc)) == 1 and not desc.get("stale"), (
+    desc = store.list_indexes()["ivf"]
+    assert len(desc["segments"]) == 1 and not desc["stale"], (
         "shifted append must re-fit back to one fresh segment"
     )
     reopened = AnnIndexStore(spark, store.base)  # answer off disk

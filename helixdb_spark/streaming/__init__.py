@@ -1035,8 +1035,8 @@ def stream_index_refresh(
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         db.close()
     if debug is not None:
-        desc = store._state["indexes"]["lsh"]
-        debug["segments"] = len(store._segments(desc))
+        desc = store.list_indexes()["lsh"]
+        debug["segments"] = len(desc["segments"])
         debug["n_rows"] = int(desc["n_rows"])
     return store.lsh_topk(queries, k=k)
 
@@ -1244,8 +1244,8 @@ def stream_dedup_lsh(
                 pass
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     if debug is not None:
-        desc = store._state["indexes"]["minhash"]
-        debug["segments"] = len(store._segments(desc))
+        desc = store.list_indexes()["minhash"]
+        debug["segments"] = len(desc["segments"])
         debug["n_rows"] = int(desc["n_rows"])
         debug["batches"] = batch_stats
     return store.minhash_pairs(threshold=threshold)
