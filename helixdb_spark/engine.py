@@ -42,13 +42,14 @@ from __future__ import annotations
 
 import functools
 import json
+import math
 import os
 from dataclasses import dataclass
 from typing import Iterable, Iterator, Optional, Sequence
 
 from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,6 +59,7 @@ from helixdb_spark.fsio import EngineFS
 from helixdb_spark.layout import (
     CHUNK_TYPE,
     COLD_GEN_SCHEMA,
+    COLD_SCHEMA,
     ENTRY_SCHEMA,
     HOT_SCHEMA,
     Layout,
@@ -245,7 +247,7 @@ class HelixSpark:
         # session-local index-maintenance registry (register_index): the
         # reference rebuilds its index INSIDE compaction (src/file/
         # sstable.rs:94-143 driven by src/level.rs:430-447); here every
-        # compact()/optimize() ends by appending registered AnnIndexStore
+        # cold commit ends by appending registered AnnIndexStore
         # indexes' ingest deltas so a persisted index can't silently go
         # stale between corpus version and index version.
         self._index_registry: list[tuple] = []
@@ -401,6 +403,114 @@ class HelixSpark:
         self._save_state()
         return gen
 
+    def _stage_cold(self, df: DataFrame) -> Optional[tuple[int, list[int], bool]]:
+        """STAGE half of the cold commit protocol (see :meth:`_commit_cold`)
+        and the engine's only cold write. Returns ``(gen, produced buckets,
+        any blob-codec row)`` — from a driver-side listing and an
+        Observation on the write, so staging runs no job of its own — or
+        None, with the staged dir removed, when the write produced nothing."""
+        gen = self._reserve_cold_gen()
+        gen_dir = self.layout.cold_gen_path(gen)
+        obs = Observation()
+        (
+            df.select(*COLD_SCHEMA.fieldNames())
+            .observe(obs, F.max(F.col("codec") != ARRAY_CODEC).alias("blobs"))
+            .write.mode("overwrite")
+            # Parquet bloom filter on the key column, as on put's hot write
+            .option("parquet.bloom.filter.enabled#key", "true")
+            .partitionBy("time_bucket")
+            .parquet(gen_dir)
+        )
+        produced = self._fs.list_buckets(gen_dir)
+        if not produced:
+            self._fs.delete(gen_dir)
+            return None
+        return gen, produced, bool(obs.get["blobs"])
+
+    def _commit_cold(
+        self,
+        gen: int,
+        produced: Sequence[int],
+        blobs: bool,
+        hot_dropped: Sequence[int] = (),
+    ) -> None:
+        """COMMIT + GC half of the cold commit protocol, shared by every
+        cold writer (compact, bulk_load, optimize, restore_chunks).
+        Write-new-then-flip; reference analog: the fdatasync'd LEVEL_INFO
+        superblock, src/types/level_info.rs:98-111:
+
+        1. STAGE (:meth:`_stage_cold`) — write the bucket data to a fresh
+           CAS-reserved generation dir ``cold/gen=N/`` (live data is never
+           mutated or renamed in place, so this is object-store safe).
+        2. COMMIT — flip the ``produced`` buckets' manifest entries to
+           ``gen``, OR the staged blob flag into ``has_blobs``, and (with
+           ``keep_generations``) append the rollback / time-travel history
+           entry, all in ONE atomic state replace. A crash before this
+           point leaves the old manifest: readers never see the staged gen,
+           whose unreferenced dir ``vacuum()`` collects.
+        3. GC — delete superseded cold bucket dirs and the ``hot_dropped``
+           partitions the new generation covers. Best-effort: a crash
+           mid-GC leaves garbage the manifest doesn't reference (invisible
+           to readers; hot leftovers re-win the LWW dedup with identical
+           values) that a retried compact or ``vacuum()`` collects later.
+           With ``keep_generations`` > 0 the dropped hot partitions PARK in
+           trash/ (restorable), superseded cold dirs stay put (the manifest
+           hides them), and only commits that fall out of the retention
+           window are collected."""
+        manifest_before = dict(self._state.get("cold_manifest") or {})
+        manifest = dict(manifest_before)
+        superseded = [
+            (int(manifest[str(b)]), b) for b in produced if str(b) in manifest
+        ]
+        manifest.update({str(b): gen for b in produced})
+        keep = self.options.keep_generations
+        expired: list = []
+        if keep > 0:
+            history = list(self._state.get("commit_history") or [])
+            history.append(
+                {
+                    "gen": gen,
+                    "manifest_before": manifest_before,
+                    "superseded": [[g, b] for g, b in superseded],
+                    "hot_dropped": list(hot_dropped),
+                    # put-sequence watermark at commit time: lets
+                    # scan_asof_commit exclude rows written after this
+                    # commit (time travel)
+                    "seq_at_commit": int(self._state.get("seq", 0)),
+                }
+            )
+            expired, history = history[:-keep], history[-keep:]
+            self._state["commit_history"] = history
+        self._state["cold_manifest"] = manifest
+        if blobs:
+            # must land in the SAME commit that makes blob rows visible, or
+            # a reopen would skip the decompress UDF and explode would
+            # silently drop the blob rows
+            self._state["has_blobs"] = True
+        self._save_state()
+        self._invalidate_cache()
+
+        if keep > 0:
+            for b in hot_dropped:
+                self._fs.move(
+                    f"{self.layout.hot_path}/time_bucket={b}",
+                    f"{self.layout.trash_path(gen)}/time_bucket={b}",
+                )
+            for e in expired:
+                for old_gen, b in e["superseded"]:
+                    self._fs.delete(
+                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
+                    )
+                self._fs.delete(self.layout.trash_path(int(e["gen"])))
+        else:
+            # the reference purges its memindex range + advances the rick GC
+            # offset (level.rs:430-459); here the unit of GC is the
+            # partition directory
+            for old_gen, b in superseded:
+                self._fs.delete(f"{self.layout.cold_gen_path(old_gen)}/time_bucket={b}")
+            for b in hot_dropped:
+                self._fs.delete(f"{self.layout.hot_path}/time_bucket={b}")
+
     # ------------------------------------------------------------------ put
     def put(self, entries: DataFrame | Sequence[tuple[int, bytes, bytes]]) -> None:
         """Durable batch write (reference src/db.rs:45-47, sharding_put
@@ -435,8 +545,6 @@ class HelixSpark:
         # A3 max-ts fold (level.rs:105-109) rides the write job as an
         # Observation metric instead of a second full pass over the input —
         # at ingest scale the input may be an expensive upstream plan.
-        from pyspark.sql import Observation
-
         obs = Observation()
         (
             df.observe(obs, F.max("ts").alias("max_ts"))
@@ -488,10 +596,8 @@ class HelixSpark:
         - Duplicate (ts, key) rows within one batch resolve exactly like a
           compaction of equal-seq rows: the max value by byte order wins.
           Pre-dedup the batch for any other semantics.
-        - Custom codec dispatch is NOT applied (rows store natively, like
-          any fresh compaction's ARRAY_CODEC rows under the default
-          registry); re-``compact()`` of the bucket applies the registry.
-          Refused up front when a custom dispatch is registered.
+        - The codec registry applies exactly as in a compaction: the
+          dispatch picks each key's codec and blob codecs compress.
 
         Later ``put()``s into a bulk-loaded bucket behave exactly like
         late data into any compacted bucket: hot rows carry a real seq,
@@ -499,106 +605,33 @@ class HelixSpark:
         and the next re-compaction folds it in.
         """
         self._check_open()
-        if self.codecs.custom_dispatch:
-            raise ValueError(
-                "bulk_load stores rows natively; a custom codec dispatch is "
-                "registered — use put() + compact() so the registry applies"
-            )
         if not isinstance(entries, DataFrame):
             entries = self.spark.createDataFrame(
                 [(int(t), bytes(k), bytes(v)) for t, k, v in entries],
                 ENTRY_SCHEMA,
             )
-        df = entries.select("ts", "key", "value").withColumn(
-            "time_bucket", self.layout.bucket_expr()
-        )
-        # the compact() group shape: one shuffle to (key, bucket) chunks,
-        # LWW inside the sorted array (equal ts -> max value, the same
-        # winner a compaction picks for equal seq)
-        raw = F.col("_raw")
-        cold_new = (
-            df.groupBy("key", "time_bucket")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("ts", "value"))
-                ).alias("_raw")
-            )
-            .select(
-                "key",
-                F.lit(ARRAY_CODEC).alias("codec"),
-                F.transform(
-                    F.filter(
-                        raw,
-                        lambda x, i: (i == F.size(raw) - 1)
-                        | (F.get(raw, i + 1)["ts"] != x["ts"]),
-                    ),
-                    lambda x: F.struct(
-                        x["ts"].alias("ts"), x["value"].alias("value")
-                    ),
-                ).alias("chunk"),
-                F.lit(None).cast("binary").alias("blob"),
-                "time_bucket",
+        # compact()'s chunks with every row at one seq: equal ts keeps the
+        # max value, the winner a compaction picks for equal seq
+        staged = self._stage_cold(
+            self._encode_chunks(
+                entries.select("ts", "key", "value")
+                .withColumn("seq", F.lit(0).cast("long"))
+                .withColumn("time_bucket", self.layout.bucket_expr())
             )
         )
-        # STAGE under a CAS-reserved generation (compact()'s protocol)
-        gen = self._reserve_cold_gen()
-        gen_dir = self.layout.cold_gen_path(gen)
-        (
-            cold_new.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#key", "true")
-            .partitionBy("time_bucket")
-            .parquet(gen_dir)
-        )
-        produced = self._fs.list_buckets(gen_dir)
-        if not produced:
-            # empty batch: nothing to publish — remove the staged dir
-            # (otherwise it sits orphaned until vacuum(), like the clash path)
-            self._fs.delete(gen_dir)
-            return
-        manifest_before = dict(self._state.get("cold_manifest") or {})
+        if staged is None:
+            return  # empty batch: nothing to publish
+        gen, produced, _ = staged
+        manifest = self._state.get("cold_manifest") or {}
         hot_buckets = set(self._fs.list_buckets(self.layout.hot_path))
-        clash = sorted(
-            b
-            for b in produced
-            if str(b) in manifest_before or b in hot_buckets
-        )
+        clash = [b for b in produced if str(b) in manifest or b in hot_buckets]
         if clash:
-            self._fs.delete(gen_dir)
+            self._fs.delete(self.layout.cold_gen_path(gen))
             raise ValueError(
                 f"bulk_load: time buckets {clash} already hold data — bulk "
                 "ingest owns whole buckets; route live ranges through put()"
             )
-        # COMMIT: one atomic manifest flip, riding the same history /
-        # time-travel machinery as a compaction commit (empty superseded /
-        # hot_dropped: nothing was replaced)
-        manifest = dict(manifest_before)
-        for b in produced:
-            manifest[str(b)] = gen
-        keep = int(getattr(self.options, "keep_generations", 0))
-        expired: list = []
-        if keep > 0:
-            history = list(self._state.get("commit_history") or [])
-            history.append(
-                {
-                    "gen": gen,
-                    "manifest_before": manifest_before,
-                    "superseded": [],
-                    "hot_dropped": [],
-                    "seq_at_commit": int(self._state.get("seq", 0)),
-                }
-            )
-            expired, history = history[:-keep], history[-keep:]
-            self._state["commit_history"] = history
-        self._state["cold_manifest"] = manifest
-        self._invalidate_cache()
-        self._save_state()
-        if keep > 0:
-            for e in expired:
-                for old_gen, b in e["superseded"]:
-                    self._fs.delete(
-                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
-                    )
-                self._fs.delete(self.layout.trash_path(int(e["gen"])))
+        self._commit_cold(*staged)
         self._refresh_indexes()
 
     # ------------------------------------------------------------- get/scan
@@ -969,42 +1002,27 @@ class HelixSpark:
         the reference's ``no_decompress`` exists for, src/option.rs:
         131-148, completed into a backup/replicate pair).
 
-        Chunks land in a fresh CAS-reserved cold generation partitioned by
-        ``time_bucket``; the manifest flips the imported buckets to that
-        generation in one atomic commit (write-new-then-flip — a crash
-        before the flip leaves an unreferenced dir ``vacuum()`` collects).
-        A bucket already present is REPLACED (restore-wins); the
-        destination must be opened with a codec registry that knows the
+        Chunks land hash-partitioned by (key, bucket), as a compaction
+        writes them, and commit like any cold write (:meth:`_commit_cold`:
+        atomic manifest flip, history under ``keep_generations``, GC). A
+        bucket already present is REPLACED (restore-wins), which may remove
+        rows, so that restore invalidates registered indexes as ``outdate``
+        does; otherwise it refreshes them. An empty ``chunks`` is a no-op.
+        The destination must be opened with a codec registry that knows the
         imported codec names or later reads of those keys will fail."""
         self._check_open()
-        gen = self._reserve_cold_gen()
-        path = self.layout.cold_gen_path(gen)
-        (
-            chunks.select("key", "codec", "chunk", "blob", "time_bucket")
-            .write.mode("overwrite")
-            .partitionBy("time_bucket")
-            .parquet(path)
-        )
-        buckets = [
-            int(r["time_bucket"])
-            for r in self.spark.read.parquet(path)
-            .select("time_bucket")
-            .distinct()
-            .collect()
-        ]
-        manifest = dict(self._state.get("cold_manifest") or {})
-        for b in buckets:
-            manifest[str(b)] = gen
-        self._state["cold_manifest"] = manifest
-        if not self._state.get("has_blobs") and not (
-            self.spark.read.parquet(path)
-            .where(F.col("codec") != ARRAY_CODEC)
-            .isEmpty()
-        ):
-            # must land in the SAME commit that makes blob rows visible
-            self._state["has_blobs"] = True
-        self._save_state()
-        self._invalidate_cache()
+        staged = self._stage_cold(chunks.repartition("key", "time_bucket"))
+        if staged is None:
+            return
+        manifest = self._state.get("cold_manifest") or {}
+        replaced = [b for b in staged[1] if str(b) in manifest]  # restore-wins
+        self._commit_cold(*staged)
+        if replaced:
+            self._invalidate_purged_indexes(
+                f"restore_chunks replacing buckets {replaced}"
+            )
+        else:
+            self._refresh_indexes()
 
     def direct_get(self, shard_id: int, ts: int, key: bytes) -> Optional[bytes]:
         """Point lookup naming the shard (reference src/db.rs:57-65
@@ -1322,28 +1340,13 @@ class HelixSpark:
         Per bucket: last-write-wins dedup, group by key,
         ``sort_array(collect_list(struct(ts,value)))`` — exactly the
         reference's HashMap group + sort (level.rs:387-397, SURVEY A1) as one
-        shuffle — then the dispatch fn picks a codec per key (fn_registry.rs:
-        46-49) and blob codecs run in one pandas UDF pass (UDCF compress,
-        fn_registry.rs:8-12). Idempotent per bucket: cold rows for the bucket
-        are replaced, and hot partition dirs are dropped afterwards — so
-        re-compacting after late data is safe (unlike the reference, whose
-        late puts become unreachable — SURVEY.md §2.10 caveat).
-
-        Commit protocol (write-new-then-flip; reference analog: the
-        fdatasync'd LEVEL_INFO superblock, src/types/level_info.rs:98-111):
-
-        1. STAGE — write the merged bucket data to a fresh generation dir
-           ``cold/gen=N/`` (append-only; live data untouched, so this is
-           object-store safe — no in-place mutation, no rename of live data).
-        2. COMMIT — flip the bucket→gen manifest entries (plus has_blobs and
-           the gen counter) in ONE atomic state replace. A crash before this
-           point leaves the old manifest: readers never see the staged gen,
-           and the next compact overwrites the same staging gen number.
-        3. GC — delete superseded cold bucket dirs and fully-covered hot
-           partitions. Best-effort: a crash mid-GC leaves garbage that the
-           manifest doesn't reference (invisible to readers; hot leftovers
-           re-win the LWW dedup with identical values) and that a retried
-           compact or ``vacuum()`` collects later.
+        shuffle — then the codec registry (:meth:`_encode_chunks`).
+        Idempotent per bucket: cold rows for the bucket are replaced, and hot
+        partition dirs are dropped afterwards — so re-compacting after late
+        data is safe (unlike the reference, whose late puts become
+        unreachable — SURVEY.md §2.10 caveat). Commits write-new-then-flip
+        (:meth:`_commit_cold`); the hot partitions the range fully covers
+        are its GC.
         """
         self._check_open()
         hot = self._hot_df()
@@ -1375,13 +1378,29 @@ class HelixSpark:
                     )
                 )
             )
+        staged = self._stage_cold(self._encode_chunks(src))
+        if staged is None:  # defensive: src was non-empty, so this can't fire
+            return
+        full_lo = start_ts // self.layout.rick_range
+        if start_ts % self.layout.rick_range:
+            full_lo += 1  # never drop a bucket the range only partially covers
+        full_hi = (end_ts + 1) // self.layout.rick_range - 1
+        self._commit_cold(*staged, hot_dropped=range(full_lo, full_hi + 1))
+        self._refresh_indexes(bounds=(start_ts, end_ts))
 
-        # ONE shuffle: group straight to (key, bucket) chunks carrying seq,
-        # then last-write-wins-dedup INSIDE the sorted array (keep the last
-        # element of every ts-run) — replaces the old window-dedup shuffle +
-        # re-shuffle. sort_array orders by (ts, seq), so the kept element is
-        # the highest seq per ts, i.e. the same winner the reference's
-        # offset-ordered memindex rebuild picks (src/file/rick.rs:403-417).
+    def _encode_chunks(self, src: DataFrame) -> DataFrame:
+        """Cold rows ``(key, codec, chunk, blob, time_bucket)`` from stored
+        versions ``(ts, key, value, seq, time_bucket)``, the chunk builder
+        of :meth:`compact` and :meth:`bulk_load`.
+
+        ONE shuffle: group straight to (key, bucket) chunks carrying seq,
+        then last-write-wins-dedup INSIDE the sorted array (keep the last
+        element of every ts-run). sort_array orders by (ts, seq, value), so
+        the kept element is the highest seq per ts — the same winner the
+        reference's offset-ordered memindex rebuild picks (src/file/rick.rs:
+        403-417) — and among equal seqs the max value. Then the dispatch fn
+        picks a codec per key (fn_registry.rs:46-49) and blob codecs run in
+        one pandas UDF pass (UDCF compress, fn_registry.rs:8-12)."""
         raw = F.col("_raw")
         grouped = (
             src.groupBy("key", "time_bucket")
@@ -1407,145 +1426,55 @@ class HelixSpark:
                 ).alias("chunk"),
             )
         )
-
-        self._invalidate_cache()
         registry = self.codecs
         if not registry.custom_dispatch:
             # default dispatch: every key stores natively — no Python at all
-            cold_new = grouped.select(
+            return grouped.select(
                 "key",
                 F.lit(ARRAY_CODEC).alias("codec"),
                 "chunk",
                 F.lit(None).cast("binary").alias("blob"),
                 "time_bucket",
             )
-        else:
-            # persisted at the COMMIT below — the flag must hit disk in the
-            # same atomic flip that makes blob rows visible, or a reopen
-            # after a direct compact() would skip the decompress UDF and
-            # explode would silently drop the blob rows
-            self._state["has_blobs"] = True
 
-            @F.pandas_udf(T.StringType())
-            def pick_codec(key_s):
-                import pandas as pd
+        @F.pandas_udf(T.StringType())
+        def pick_codec(key_s):
+            import pandas as pd
 
-                return pd.Series([registry.dispatch(bytes(k)) for k in key_s])
+            return pd.Series([registry.dispatch(bytes(k)) for k in key_s])
 
-            @F.pandas_udf(T.BinaryType())
-            def compress(codec_s, key_s, chunk_s):
-                import pandas as pd
+        @F.pandas_udf(T.BinaryType())
+        def compress(codec_s, key_s, chunk_s):
+            import pandas as pd
 
-                out = []
-                # when()/otherwise() does not short-circuit pandas UDFs —
-                # array rows reach here too and must yield a null blob.
-                for codec, key, chunk in zip(codec_s, key_s, chunk_s):
-                    if codec == ARRAY_CODEC:
-                        out.append(None)
-                        continue
-                    pairs = [(int(e["ts"]), bytes(e["value"])) for e in chunk]
-                    out.append(registry.get(codec).compress(bytes(key), pairs))
-                return pd.Series(out)
+            out = []
+            # when()/otherwise() does not short-circuit pandas UDFs —
+            # array rows reach here too and must yield a null blob.
+            for codec, key, chunk in zip(codec_s, key_s, chunk_s):
+                if codec == ARRAY_CODEC:
+                    out.append(None)
+                    continue
+                pairs = [(int(e["ts"]), bytes(e["value"])) for e in chunk]
+                out.append(registry.get(codec).compress(bytes(key), pairs))
+            return pd.Series(out)
 
-            cold_new = (
-                grouped.withColumn("codec", pick_codec("key"))
-                .withColumn(
-                    "blob",
-                    F.when(
-                        F.col("codec") == F.lit(ARRAY_CODEC),
-                        F.lit(None).cast("binary"),
-                    ).otherwise(compress("codec", "key", "chunk")),
-                )
-                .withColumn(
-                    "chunk",
-                    F.when(
-                        F.col("codec") == F.lit(ARRAY_CODEC), F.col("chunk")
-                    ).otherwise(F.lit(None).cast(CHUNK_TYPE)),
-                )
-                .select("key", "codec", "chunk", "blob", "time_bucket")
+        return (
+            grouped.withColumn("codec", pick_codec("key"))
+            .withColumn(
+                "blob",
+                F.when(
+                    F.col("codec") == F.lit(ARRAY_CODEC),
+                    F.lit(None).cast("binary"),
+                ).otherwise(compress("codec", "key", "chunk")),
             )
-
-        # 1. STAGE: write the replacement bucket partitions to a fresh
-        # generation dir. The generation number is CAS-RESERVED first (same
-        # discipline as put()'s seq): a writer holding stale state loses the
-        # reservation with ConcurrentWriterError BEFORE its mode("overwrite")
-        # can clobber a generation dir another writer already committed —
-        # reserved numbers are globally unique, so no two writers ever stage
-        # to the same path. A crash after the reservation burns a gen number
-        # and leaves an unreferenced dir that vacuum() collects.
-        gen = self._reserve_cold_gen()
-        gen_dir = self.layout.cold_gen_path(gen)
-        (
-            cold_new.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#key", "true")
-            .partitionBy("time_bucket")
-            .parquet(gen_dir)
+            .withColumn(
+                "chunk",
+                F.when(
+                    F.col("codec") == F.lit(ARRAY_CODEC), F.col("chunk")
+                ).otherwise(F.lit(None).cast(CHUNK_TYPE)),
+            )
+            .select("key", "codec", "chunk", "blob", "time_bucket")
         )
-        produced = self._fs.list_buckets(gen_dir)
-        if not produced:  # defensive: src was non-empty, so this can't fire
-            return
-
-        # 2. COMMIT: one atomic state flip publishes the new generation.
-        manifest_before = dict(self._state.get("cold_manifest") or {})
-        manifest = dict(manifest_before)
-        superseded = [
-            (int(manifest[str(b)]), b) for b in produced if str(b) in manifest
-        ]
-        for b in produced:
-            manifest[str(b)] = gen
-        full_lo = start_ts // self.layout.rick_range
-        if start_ts % self.layout.rick_range:
-            full_lo += 1  # never drop a bucket the range only partially covers
-        full_hi = (end_ts + 1) // self.layout.rick_range - 1
-        hot_dropped = list(range(full_lo, full_hi + 1))
-        keep = int(getattr(self.options, "keep_generations", 0))
-        if keep > 0:
-            # the history entry rides the SAME atomic flip as the manifest,
-            # so rollback info can never be lost to a crash window
-            history = list(self._state.get("commit_history") or [])
-            history.append(
-                {
-                    "gen": gen,
-                    "manifest_before": manifest_before,
-                    "superseded": [[g, b] for g, b in superseded],
-                    "hot_dropped": hot_dropped,
-                    # put-sequence watermark at commit time: lets
-                    # scan_asof_commit exclude rows written after this
-                    # commit (time travel); rides the same atomic flip
-                    "seq_at_commit": int(self._state.get("seq", 0)),
-                }
-            )
-            expired, history = history[:-keep], history[-keep:]
-            self._state["commit_history"] = history
-        self._state["cold_manifest"] = manifest
-        self._save_state()
-
-        # 3. GC (best-effort; see the commit-protocol docstring). With
-        # keep_generations > 0 the dropped hot partitions PARK in trash/
-        # (restorable) instead of dying, superseded cold dirs stay put
-        # (the manifest hides them from readers), and only commits that
-        # just fell out of the retention window are actually collected.
-        if keep > 0:
-            for b in hot_dropped:
-                self._fs.move(
-                    f"{self.layout.hot_path}/time_bucket={b}",
-                    f"{self.layout.trash_path(gen)}/time_bucket={b}",
-                )
-            for e in expired:
-                for old_gen, b in e["superseded"]:
-                    self._fs.delete(
-                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
-                    )
-                self._fs.delete(self.layout.trash_path(int(e["gen"])))
-        else:
-            # Drop compacted hot partitions (the reference purges its
-            # memindex range + advances the rick GC offset — level.rs:
-            # 430-459; for us the unit of GC is the partition directory).
-            for old_gen, b in superseded:
-                self._fs.delete(f"{self.layout.cold_gen_path(old_gen)}/time_bucket={b}")
-            for b in hot_dropped:
-                self._fs.delete(f"{self.layout.hot_path}/time_bucket={b}")
-        self._refresh_indexes(bounds=(start_ts, end_ts))
 
     def rollback_compaction(self) -> bool:
         """Undo the most recent compaction commit — restore the previous
@@ -1645,21 +1574,19 @@ class HelixSpark:
         files; at 100 TB that accumulates into the classic small-file tax
         (footer reads + task-per-file scheduling). This op rewrites ONLY
         buckets whose file count exceeds ceil(bytes/target), routing rows
-        to ceil-many splits by key hash, and commits with the exact
-        compact() protocol: stage to a fresh generation, flip the manifest
-        atomically (CAS), GC or retain the superseded dirs per
-        ``keep_generations`` — so a crash at any point leaves the previous
-        packing live, and ``rollback_compaction`` undoes an optimize the
-        same way it undoes a compact.
+        to ceil-many splits by key hash. It reads the planned buckets
+        through the manifest-pruned cold read path and commits through the
+        same stage / flip / GC path as compact (:meth:`_commit_cold`) — so
+        a crash at any point leaves the previous packing live, and
+        ``rollback_compaction`` undoes an optimize the same way it undoes a
+        compact.
 
         Pure rewrite: row content is byte-identical (LWW merge already
         happened at compact time); only file boundaries change — asserted
         by the scan-parity test. Returns {bucket: packed_file_count} for
         the rewritten buckets ({} = nothing needed)."""
         self._check_open()
-        import math
-
-        manifest: dict = dict(self._state.get("cold_manifest") or {})
+        manifest: dict = self._state.get("cold_manifest") or {}
         plan: dict[int, int] = {}
         for b, g in manifest.items():
             d = f"{self.layout.cold_gen_path(int(g))}/time_bucket={int(b)}"
@@ -1674,26 +1601,16 @@ class HelixSpark:
 
         # live rows of exactly the planned buckets, via the same pruned
         # cold read path queries use (uncommitted/superseded gens never
-        # opened)
-        df = self.spark.read.schema(COLD_GEN_SCHEMA).parquet(
-            self.layout.cold_path
-        )
-        pred = None
-        for b in plan:
-            p = (F.col("gen") == int(manifest[str(b)])) & (
-                F.col("time_bucket") == b
-            )
-            pred = p if pred is None else (pred | p)
-        rows = df.where(pred).drop("gen")
-        # route each bucket's rows into its `want` splits by key hash, so
-        # one write pass packs every planned bucket to its target count
+        # opened); each bucket's rows route into its `want` splits by key
+        # hash, so one write pass packs every planned bucket
         want_df = F.broadcast(
             self.spark.createDataFrame(
                 [(b, w) for b, w in plan.items()], "time_bucket long, _want int"
             )
         )
-        staged = (
-            rows.join(want_df, "time_bucket")
+        staged = self._stage_cold(
+            self._cold_df({str(b): manifest[str(b)] for b in plan})
+            .join(want_df, "time_bucket")
             .withColumn("_split", F.pmod(F.xxhash64("key"), F.col("_want")))
             .repartition("time_bucket", "_split")
             # key-clustered packing: sorted rows tighten every row-group's
@@ -1701,57 +1618,12 @@ class HelixSpark:
             # scans skip more of the packed file than of the original
             # task-ordered files — free at rewrite time
             .sortWithinPartitions("key")
-            .select("key", "codec", "chunk", "blob", "time_bucket")
         )
-        # CAS-reserve the generation before staging (see compact()): a
-        # stale writer dies here instead of overwriting a committed dir.
-        gen = self._reserve_cold_gen()
-        gen_dir = self.layout.cold_gen_path(gen)
-        (
-            staged.write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#key", "true")
-            .partitionBy("time_bucket")
-            .parquet(gen_dir)
-        )
-        produced = self._fs.list_buckets(gen_dir)
-
-        # COMMIT + GC: compact()'s protocol with no hot partitions involved
-        manifest_before = dict(manifest)
-        superseded = [(int(manifest[str(b)]), b) for b in produced]
-        for b in produced:
-            manifest[str(b)] = gen
-        keep = int(getattr(self.options, "keep_generations", 0))
-        expired: list = []
-        if keep > 0:
-            history = list(self._state.get("commit_history") or [])
-            history.append(
-                {
-                    "gen": gen,
-                    "manifest_before": manifest_before,
-                    "superseded": [[g, b] for g, b in superseded],
-                    "hot_dropped": [],
-                    "seq_at_commit": int(self._state.get("seq", 0)),
-                }
-            )
-            expired, history = history[:-keep], history[-keep:]
-            self._state["commit_history"] = history
-        self._state["cold_manifest"] = manifest
-        self._save_state()
-        self._invalidate_cache()
-        if keep > 0:
-            for e in expired:
-                for old_gen, b in e["superseded"]:
-                    self._fs.delete(
-                        f"{self.layout.cold_gen_path(int(old_gen))}/time_bucket={int(b)}"
-                    )
-                self._fs.delete(self.layout.trash_path(int(e["gen"])))
-        else:
-            for old_gen, b in superseded:
-                self._fs.delete(
-                    f"{self.layout.cold_gen_path(old_gen)}/time_bucket={b}"
-                )
+        if staged is None:
+            return {}
+        self._commit_cold(*staged)
         self._refresh_indexes()
-        return {b: plan[b] for b in produced}
+        return {b: plan[b] for b in staged[1]}
 
     def outdate(self, cutoff_ts: int) -> None:
         """Retention: retire data with ts <= cutoff (reference
@@ -1804,7 +1676,7 @@ class HelixSpark:
             str(pb) in manifest or pb in hot_buckets
         )
         if dead or dropped_hot or (advanced and partial_occupied):
-            self._invalidate_purged_indexes(cutoff)
+            self._invalidate_purged_indexes(f"retention (outdate cutoff={cutoff})")
 
     # ------------------------------------------------------------------ SQL
     def entries_view(self, name: str = "entries") -> DataFrame:
@@ -1836,7 +1708,8 @@ class HelixSpark:
         **append_kw,
     ) -> None:
         """Register a persisted ANN index for automatic maintenance: after
-        every ``compact()``/``optimize()`` commit, the engine appends the
+        every cold commit (``compact``, ``bulk_load``, ``optimize``, a
+        ``restore_chunks`` into new buckets), the engine appends the
         index's ingest delta (``AnnIndexStore.append_*`` under the frozen
         hash state) so the index version tracks the corpus version without
         a manual rebuild — the reference folds exactly this into compaction
@@ -1993,22 +1866,23 @@ class HelixSpark:
             )
         return True
 
-    def _invalidate_purged_indexes(self, cutoff: int) -> None:
-        """Post-retention hook: appended index segments cannot lose rows,
-        so once retention may have removed live rows every registered
-        index may be serving purged ids — flip them stale (see
-        register_index docstring). The caller (``outdate``) decides MAY
+    def _invalidate_purged_indexes(self, reason: str) -> None:
+        """Hook for commits that may have removed live rows (retention,
+        a restore replacing a bucket): appended index segments cannot lose
+        rows, so every registered index may be serving purged ids — flip
+        them stale (see register_index docstring). The caller decides MAY
         from its own commit facts (buckets dropped / cutoff inside an
-        occupied bucket), so this path launches no Spark jobs; the r8
-        version counted the corpus once per index per outdate()."""
+        occupied bucket / buckets replaced), so this path launches no Spark
+        jobs; the r8 version counted the corpus once per index per
+        outdate()."""
         for store, name, *_rest in self._index_registry:
             info = store.list_indexes().get(name)
             if info is None or info["stale"]:
                 continue
             store.invalidate(
                 name,
-                f"retention (outdate cutoff={cutoff}) may have purged rows "
-                f"covered by the index (n_rows={info['n_rows']})",
+                f"{reason} may have purged rows covered by the index "
+                f"(n_rows={info['n_rows']})",
             )
 
     # ------------------------------------------------------------------ misc

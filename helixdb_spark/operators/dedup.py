@@ -320,39 +320,6 @@ def ngram_containment_pairs(
 
 
 # ---------------------------------------------------------------- MinHash
-def minhash_signatures(
-    shingled: DataFrame, id_col: str = "doc_id", num_hashes: int = NUM_MINHASHES
-) -> DataFrame:
-    """(id, h0..h{k-1}) minhash signature: h_i = min over shingles of
-    (a_i * md5_32(shingle) + b_i) mod P. ONE md5 per shingle, JVM-side.
-
-    The k minima are k interpreted ``array_min(transform(...))`` passes over
-    a per-doc ``collect_list`` of base hashes, NOT a k-column ``min(...)``
-    aggregate (whose 32-wide codegen method Janino recompiles for every
-    fresh plan, ~3 s/run — the cliff simhash_fingerprints documents). The
-    explode → groupBy gather is deliberate: it is the materialization
-    BARRIER that makes each shingle's md5 evaluate exactly once — a pure
-    projection of the hash array would be CollapseProject-merged into all k
-    consumers and re-run the md5 k times per shingle. Docs with no shingles
-    produce no gathered row (explode drops them)."""
-    exploded = shingled.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    base = _hex_long(F.col("shingle"), 8).alias("bh")
-    gathered = (
-        exploded.select(F.col(id_col), base)
-        .groupBy(id_col)
-        .agg(F.collect_list("bh").alias("bhs"))
-    )
-
-    def _affine(a: int, b: int):
-        return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    hash_cols = [
-        F.array_min(F.transform(F.col("bhs"), _affine(a, b))).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return gathered.select(F.col(id_col), *hash_cols)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",

@@ -351,14 +351,6 @@ def _bloom_positions(key: Column, k: int = BLOOM_K, m: int = BLOOM_M) -> Column:
     )
 
 
-def bloom_build(df: DataFrame, key_col: str, k: int = BLOOM_K, m: int = BLOOM_M) -> DataFrame:
-    """The set bit positions (≤ m single-column rows) — one distinct shuffle."""
-    return (
-        df.select(F.explode(_bloom_positions(F.col(key_col), k, m)).alias("pos"))
-        .distinct()
-    )
-
-
 # Packed-word layout: 32 bits per word so the mask 2^(pos%32) is exactly
 # representable as pow(2.0, ·) — shiftleft() takes only a literal shift in
 # the column API, and 2^63 would overflow signed int64 anyway.

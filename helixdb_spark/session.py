@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    about 60% of the host's physical memory, in MiB. In local mode the
+    driver JVM holds every executor too, so a fixed large heap can outgrow
+    a small host and get the JVM killed mid-run; 60% leaves room for the
+    JVM's off-heap memory and the Python workers."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "4g"  # no sysconf on this platform
+    return f"{max(1024, phys * 6 // 10 >> 20)}m"
+
+
 def get_session(
     app_name: str = "helixdb_spark",
     shuffle_partitions: int | None = None,
@@ -58,7 +71,10 @@ def get_session(
         # cannot map to TimestampType; read it as long and convert in the
         # loader (helixdb_spark.sources.tables).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # list partitioned dirs on the driver up to 1024 paths: the default

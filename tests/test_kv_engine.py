@@ -305,92 +305,128 @@ def test_stream_ingest_to_engine(spark, db_path, sf_dir):
     db.close()
 
 
-def test_compact_crash_before_commit(spark, db_path, monkeypatch):
-    """Crash injected between the staged generation write and the manifest
-    flip: the old manifest stays live, readers never see the staged gen,
-    and a retried compact commits the same data (reference contract: the
-    LEVEL_INFO superblock flip, src/types/level_info.rs:98-111)."""
-    db = HelixSpark.open(spark, db_path, HelixOptions(rick_range=10, auto_maintain=False))
-    db.put([(t, b"k%d" % t, b"v%d" % t) for t in range(10)])
-    expected = [(t, b"k%d" % t, b"v%d" % t) for t in range(10)]
+ROWS10 = [(t, b"k%d" % t, b"v%d" % t) for t in range(10)]
+OPTS10 = HelixOptions(rick_range=10, auto_maintain=False)
 
-    # let the gen RESERVATION save succeed (it precedes staging), then
-    # crash the COMMIT save — the original staged-but-unflipped window
+
+def _rows(db):
+    return sorted(
+        (r["ts"], bytes(r["key"]), bytes(r["value"]))
+        for r in db.scan((0, 99)).collect()
+    )
+
+
+def _cold_dirs(db):
+    """(gen, bucket) cold dirs on disk."""
+    import os as _os
+
+    cold = db.layout.cold_path
+    return {
+        (int(g.split("=", 1)[1]), b)
+        for g in _os.listdir(cold)
+        for b in db._fs.list_buckets(f"{cold}/{g}")
+    }
+
+
+def _compact_small_files(spark, db, lo, hi):
+    """compact() with AQE off: one file per shuffle task holding keys, so
+    ``optimize`` has work."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        db.compact(lo, hi)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _crashed_cold_write(spark, db_path, monkeypatch, writer, after_commit):
+    """Run one cold writer against an engine whose bucket 0 is committed
+    cold in several files (so ``optimize`` has work), crashing its second
+    state save — the commit; the first is the gen reservation — just
+    before or just after it publishes. Returns the reopened engine, the
+    rows a scan returned before, the rows the call commits, and the
+    manifest before."""
+    db = HelixSpark.open(spark, db_path, OPTS10)
+    db.put(ROWS10)
+    db.put(ROWS10)
+    _compact_small_files(spark, db, 0, 9)  # gen=0
+    if writer == "compact":
+        db.put([(3, b"k3", b"late")])  # late overwrite: a re-compaction
+        call, new = (lambda d: d.compact(0, 9)), _rows(db)
+    elif writer == "bulk_load":
+        bulk = [(t, b"b%d" % t, b"bulk") for t in range(20, 25)]
+        call, new = (lambda d: d.bulk_load(bulk)), sorted(_rows(db) + bulk)
+    elif writer == "optimize":
+        call, new = (lambda d: d.optimize(target_file_bytes=1 << 30)), _rows(db)
+    else:  # restore_chunks replaces the live bucket 0
+        new = [(t, b"k%d" % t, b"r%d" % t) for t in range(10)]
+        src = HelixSpark.open(spark, db_path + "_src", OPTS10)
+        src.put(new)
+        src.compact(0, 9)
+        exported = src.scan_raw()
+        call = lambda d: d.restore_chunks(exported)  # noqa: E731
+    old, manifest = _rows(db), dict(db._state["cold_manifest"])
+
     real_save = HelixSpark._save_state
-    calls = {"n": 0}
+    calls = []
 
     def boom(self):
-        calls["n"] += 1
-        if calls["n"] > 1:
+        calls.append(1)
+        if len(calls) == 2 and not after_commit:
             raise RuntimeError("injected crash before commit")
         real_save(self)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash after commit")
 
     monkeypatch.setattr(HelixSpark, "_save_state", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        db.compact(0, 9)
+        call(db)
     monkeypatch.undo()
-
-    db2 = HelixSpark.open(spark, db_path, HelixOptions(rick_range=10, auto_maintain=False))
-    assert db2._state.get("cold_manifest") in (None, {})  # nothing committed
-    got = [(r["ts"], bytes(r["key"]), bytes(r["value"])) for r in db2.scan((0, 9)).collect()]
-    assert sorted(got) == expected
-    # retry: a FRESH reserved gen is staged (reserved numbers are never
-    # reused); the crashed reservation's dir is unreferenced garbage
-    db2.compact(0, 9)
-    got = [(r["ts"], bytes(r["key"]), bytes(r["value"])) for r in db2.scan((0, 9)).collect()]
-    assert sorted(got) == expected
-    assert db2.get(3, b"k3") == b"v3"
-    # vacuum collects the orphaned staged generation from the crashed run
-    import os as _os
-
-    gen0 = f"{db2.layout.cold_path}/gen=0"
-    assert _os.path.isdir(gen0)  # crashed staging leftover
-    db2.vacuum()
-    assert not _os.path.isdir(gen0)
-    assert db2.get(3, b"k3") == b"v3"
+    return HelixSpark.open(spark, db_path, OPTS10), call, old, new, manifest
 
 
-def test_compact_crash_after_commit_before_gc(spark, db_path, monkeypatch):
-    """Crash injected after the manifest flip but before GC: superseded cold
-    dirs and undropped hot partitions linger, but the manifest prunes the
-    former and LWW dedup absorbs the latter; vacuum() collects the rest."""
-    from helixdb_spark.fsio import EngineFS
+COLD_WRITERS = ("compact", "bulk_load", "optimize", "restore_chunks")
 
-    db = HelixSpark.open(spark, db_path, HelixOptions(rick_range=10, auto_maintain=False))
-    db.put([(t, b"k%d" % t, b"v%d" % t) for t in range(10)])
-    db.compact(0, 9)           # gen=0 committed and GC'd normally
-    db.put([(3, b"k3", b"late")])  # late overwrite forces a re-compaction
 
-    real_delete = EngineFS.delete
+@pytest.mark.parametrize("writer", COLD_WRITERS)
+def test_compact_crash_before_commit(spark, db_path, monkeypatch, writer):
+    """Crash between the staged generation write and the manifest flip,
+    for every cold writer: the old manifest stays live, readers never see
+    the staged gen, vacuum() collects it, and a retried call commits
+    (reference contract: the LEVEL_INFO superblock flip,
+    src/types/level_info.rs:98-111)."""
+    db, call, old, new, manifest = _crashed_cold_write(
+        spark, db_path, monkeypatch, writer, after_commit=False
+    )
+    assert db._state["cold_manifest"] == manifest  # nothing committed
+    assert _rows(db) == old
+    staged = db._state["cold_gen_seq"] - 1
+    assert any(g == staged for g, _ in _cold_dirs(db))  # crashed staging leftover
+    db.vacuum()
+    assert _cold_dirs(db) == {(g, int(b)) for b, g in manifest.items()}
+    assert _rows(db) == old
+    call(db)  # the retry stages under a FRESH reserved gen
+    assert _rows(db) == new
 
-    def boom(self, p):
-        # crash only the DATA-dir GC (the step under test); the state
-        # pointer's own version GC inside write_text_cas stays live —
-        # the gen reservation and the commit both publish through it
-        if "time_bucket=" in p:
-            raise RuntimeError("injected crash during GC")
-        real_delete(self, p)
 
-    monkeypatch.setattr(EngineFS, "delete", boom)
-    with pytest.raises(RuntimeError, match="injected"):
-        db.compact(0, 9)       # gen=1 commits, then GC dies
-    monkeypatch.undo()
-
-    db2 = HelixSpark.open(spark, db_path, HelixOptions(rick_range=10, auto_maintain=False))
-    # the commit landed: manifest points every bucket at gen=1
-    assert set(db2._state["cold_manifest"].values()) == {1}
-    got = {(r["ts"], bytes(r["key"])): bytes(r["value"]) for r in db2.scan((0, 9)).collect()}
-    assert len(got) == 10
-    assert got[(3, b"k3")] == b"late"      # hot leftover re-wins LWW, same value as cold
-    assert got[(7, b"k7")] == b"v7"
-    # vacuum collects the superseded gen=0 bucket dirs the crashed GC left
-    import os as _os
-    gen0 = f"{db2.layout.cold_path}/gen=0"
-    assert _os.path.isdir(gen0)
-    db2.vacuum()
-    assert not _os.path.isdir(gen0)
-    got2 = {(r["ts"], bytes(r["key"])): bytes(r["value"]) for r in db2.scan((0, 9)).collect()}
-    assert got2 == got
+@pytest.mark.parametrize("writer", COLD_WRITERS)
+def test_compact_crash_after_commit_before_gc(spark, db_path, monkeypatch, writer):
+    """Crash right after the manifest flip, before any GC, for every cold
+    writer: the new state answers after reopen (superseded cold dirs
+    linger but the manifest prunes them; undropped hot partitions re-win
+    the LWW dedup with identical values), and vacuum() collects every dir
+    the manifest no longer references."""
+    db, _, _, new, _ = _crashed_cold_write(
+        spark, db_path, monkeypatch, writer, after_commit=True
+    )
+    assert db._state["cold_gen_seq"] - 1 in db._state["cold_manifest"].values()
+    assert _rows(db) == new
+    live = {(int(g), int(b)) for b, g in db._state["cold_manifest"].items()}
+    if writer != "bulk_load":  # the other three replace bucket 0's gen=0 dir
+        assert (0, 0) in _cold_dirs(db) - live
+    db.vacuum()
+    assert _cold_dirs(db) == live
+    assert _rows(db) == new
 
 
 def test_read_cache_point_gets(spark, db_path):
@@ -876,6 +912,31 @@ def test_point_reads_job_counts_and_answers(spark, db_path, cache_reads):
     assert db.get_asof(37, b"kb") == (36, model[(36, b"kb")])
     assert db.get_asof(12, b"ka") is None
     db.close()
+
+
+def test_write_job_counts(spark, db_path):
+    """Spark jobs per write call: put 2, compact and re-compact 3,
+    bulk_load 2, a packing optimize 3 and restore_chunks 2. The shared
+    cold commit path lists the produced buckets on the driver and observes
+    the blob flag on the write, so it adds no job of its own."""
+    db = HelixSpark.open(spark, db_path, OPTS10)
+    rows = [(t, b"k%d" % t, b"v%d" % t) for t in range(40)]
+    assert _jobs_of(spark, lambda: db.put(rows))[1] == 2
+    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 3
+    db.put([(3, b"k3", b"late")])
+    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 3
+    bulk = [(t, b"b%d" % t, b"bulk") for t in range(100, 120)]
+    assert _jobs_of(spark, lambda: db.bulk_load(bulk))[1] == 2
+    db.put(rows[20:30])
+    db.put(rows[20:30])
+    _compact_small_files(spark, db, 20, 29)
+    packed, jobs = _jobs_of(spark, lambda: db.optimize(1 << 30))
+    assert packed == {2: 1} and jobs == 3
+    src = HelixSpark.open(spark, db_path + "_src", OPTS10)
+    src.put([(t, b"r%d" % t, b"x%d" % t) for t in range(20)])
+    src.compact(0, 19)
+    assert _jobs_of(spark, lambda: db.restore_chunks(src.scan_raw()))[1] == 2
+    assert db.get(3, b"r3") == b"x3" and db.get(3, b"k3") is None  # replaced
 
 
 def test_tie_break_parity_across_reads(spark, db_path):

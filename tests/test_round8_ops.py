@@ -340,6 +340,82 @@ def test_restore_chunks_crash_before_flip_leaves_replica_unchanged(
     dst2.close()
 
 
+def _restore_case(spark, tmp_path, live_bucket, **kw):
+    """A ``_codec_db`` source and a replica holding hot ts=250 and, with
+    ``live_bucket``, a compacted bucket 0 that restoring the source
+    replaces."""
+    src = _codec_db(spark, tmp_path / "src")
+    opts = HelixOptions(rick_range=100, outdate_range=1 << 30, auto_maintain=False, **kw)
+    dst = HelixSpark.open(spark, str(tmp_path / "dst"), opts, codecs=src.codecs)
+    dst.put([(250, b"live", b"val")] + [(12, b"blobkey", b"old")] * live_bucket)
+    if live_bucket:
+        dst.compact(0, 99)  # gen=0 holds bucket 0
+    return src, dst
+
+
+def _scan(db):
+    return sorted(map(tuple, db.scan((0, 300)).collect()))
+
+
+class _RecordingStore:
+    """A registered-index stand-in that records the maintenance calls."""
+
+    def __init__(self):
+        self.appends, self.invalidations = 0, []
+
+    def list_indexes(self):
+        return {"idx": {"kind": "rec", "stale": bool(self.invalidations), "n_rows": 3}}
+
+    def append_rec(self, corpus, name):
+        self.appends += 1
+        return {"segments": [0, 1]}
+
+    def invalidate(self, name, reason):
+        self.invalidations.append(reason)
+
+
+def test_restore_chunks_empty_is_noop(spark, tmp_path):
+    """An empty export publishes nothing and leaves no staged dir behind,
+    like an empty bulk_load."""
+    src, dst = _restore_case(spark, tmp_path, live_bucket=False)
+    before = _scan(dst)
+    dst.restore_chunks(src.scan_raw(time_range=(1000, 1099)))
+    assert not dst._state.get("cold_manifest")
+    assert dst._fs.listdir(dst.layout.cold_path) == []
+    assert _scan(dst) == before
+
+
+@pytest.mark.parametrize("live_bucket", [False, True])
+def test_restore_chunks_gc_and_registered_indexes(spark, tmp_path, live_bucket):
+    """Restoring over a live bucket deletes the superseded generation dir
+    (keep_generations=0) and, since rows may be gone, invalidates the
+    registered indexes as outdate does; a restore into new buckets
+    refreshes them as bulk_load does."""
+    src, dst = _restore_case(spark, tmp_path, live_bucket)
+    store = _RecordingStore()
+    dst.register_index(store, "idx", lambda _db: None, max_segments=None)
+    dst.restore_chunks(src.scan_raw(time_range=(0, 199)))
+    assert dst.get(12, b"blobkey") == b"v012"
+    if live_bucket:
+        assert not os.path.isdir(f"{dst.layout.cold_gen_path(0)}/time_bucket=0")
+        assert store.appends == 0 and "restore_chunks" in store.invalidations[0]
+    else:
+        assert store.appends == 1 and store.invalidations == []
+
+
+def test_restore_chunks_joins_commit_history(spark, tmp_path):
+    """keep_generations=2: a restore is a history entry like any cold
+    commit, so time travel reads the state before it and rollback undoes
+    it."""
+    src, dst = _restore_case(spark, tmp_path, live_bucket=True, keep_generations=2)
+    before = _scan(dst)
+    dst.restore_chunks(src.scan_raw(time_range=(0, 199)))
+    assert dst.get(12, b"blobkey") == b"v012"
+    assert sorted(map(tuple, dst.scan_asof_commit(1, (0, 300)).collect())) == before
+    assert dst.rollback_compaction()
+    assert _scan(dst) == before
+
+
 # --------------------------------------------------- batched as-of reads
 def test_get_many_asof_matches_scalar_get_asof(spark, tmp_path):
     db = HelixSpark.open(
