@@ -12,7 +12,8 @@ shard (db.rs:108-132)  hash partitioning on ``key`` (Spark tasks replace
 rick L0 (file/rick.rs) ``hot/`` parquet, partitioned by ``time_bucket``
 L>=1 + SSTable         ``cold/gen=N/`` parquet generations, one row per
 (level.rs:356-459)     (key,bucket) with the key's sorted series; parquet
-                       min/max stats + key bloom filters = the index
+                       min/max stats + key dictionaries or key bloom
+                       filters sized to each file's keys = the index
 LevelInfo              partition-pruned reads + a tiny JSON state file that
 (level_info.rs)        is ALSO the commit log: the bucket→generation cold
                        manifest and the reviewer watermarks flip together in
@@ -28,10 +29,11 @@ k-way merge            ``orderBy``: in one task when the files a scan reads
 
 Scale posture (100 TB): every job here touches only the partitions named by
 its predicate — ``get`` prunes to one ``time_bucket`` directory and then to
-row groups via key min/max stats and key bloom filters; ``compact`` is an
-incremental per-bucket job (idempotent MERGE-style: late data re-compacts a
-bucket by rewriting that bucket only — SURVEY.md §7.2 late-data stance) that
-commits write-new-then-flip (never mutates live data in place, safe on
+row groups via key min/max stats and each file's key dictionary or key
+bloom filter (``_KEY_BLOOM``); ``compact`` is an incremental per-bucket
+job (idempotent MERGE-style: late data re-compacts a bucket by rewriting
+that bucket only — SURVEY.md §7.2 late-data stance) that commits
+write-new-then-flip (never mutates live data in place, safe on
 object stores); ``outdate`` drops whole partition directories without
 reading them. Nothing ever collects data to the driver except the
 user-requested point values (every stored version of each probed pair, so
@@ -76,16 +78,37 @@ from helixdb_spark.maintenance import (
 # while amortizing the O(buckets) snapshot serialize across commits.
 STATE_CHECKPOINT_EVERY = 16
 
+# Writer options of both Parquet writes (put's hot write and _stage_cold):
+# a bloom filter on the key column, the analog of the reference's per-file
+# FilterBlocks (protos/flatbuffer/helix.fbs:53-57). Point gets prune row
+# groups beyond what min/max stats allow. With no expected NDV parquet-mr
+# writes a filter of parquet.bloom.filter.max.bytes (1 MiB) into every
+# file; the adaptive writer keeps 16 candidate sizes (16 halvings of 1 MiB
+# reach the 32-byte minimum) and, at close, writes the smallest one that
+# holds the file's actual key NDV at 1% fpp: 1 KiB for 300 keys, 256 KiB
+# for 200k. Hot files whose keys repeat stay dictionary-encoded and carry
+# no bloom (the dictionary filter prunes them); chunked cold files and
+# distinct-key hot files carry a filter sized to their NDV. parquet-mr
+# 1.16 reads adaptive mode only globally and the candidate count only per
+# column, hence the spelling.
+_KEY_BLOOM = {
+    "parquet.bloom.filter.enabled#key": "true",
+    "parquet.bloom.filter.adaptive.enabled": "true",
+    "parquet.bloom.filter.candidates.number#key": "16",
+}
+
 # An ordered scan whose plan reads at most this many bytes of files sorts in
 # one task instead of behind a range-partitioned shuffle: two Spark jobs
 # fewer, but one core dedups and sorts every entry the scan keeps, so the
 # break-even follows the entries kept, which file bytes only bound.
-# Measured on 4 cores (scripts/scan_sort_breakeven.py, the densest layout
-# at 26 bytes an entry): keeping 1/16 of the keys, one task wins at every
-# size up to 24 MiB; keeping all keys, it wins at 6 MiB and is 1.5x slower
-# at 12 MiB (1.4-1.6x up to 24 MiB). Key-ranged scans of ordinary files (13 MB for two
-# kv_cold_read buckets) stay under it.
-SCAN_ONE_TASK_SORT_BYTES = 16 << 20
+# Measured on 4 cores (scripts/scan_sort_breakeven.py, 6 alternating pairs
+# a point, dense layouts at 5.2-5.5 bytes an entry on disk): keeping all
+# keys, one task won 6/6 pairs up to 250k entries (1.31 MiB; 0.64 vs
+# 0.86 s) and lost 6/6 from 300k (1.55 MiB; 0.83 vs 0.62 s), 1.4-1.5x
+# slower at 400k-600k (2-3 MiB); keeping 1/16 of the keys it won 6/6 at
+# every size up to 3.1 MiB. The benchmark's ordered scans read at most
+# 0.92 MiB (kv_ingest_mixed after an even put).
+SCAN_ONE_TASK_SORT_BYTES = 5 << 18  # 1.25 MiB
 
 
 def _state_delta(old: dict, new: dict) -> dict:
@@ -416,8 +439,7 @@ class HelixSpark:
             df.select(*COLD_SCHEMA.fieldNames())
             .observe(obs, F.max(F.col("codec") != ARRAY_CODEC).alias("blobs"))
             .write.mode("overwrite")
-            # Parquet bloom filter on the key column, as on put's hot write
-            .option("parquet.bloom.filter.enabled#key", "true")
+            .options(**_KEY_BLOOM)
             .partitionBy("time_bucket")
             .parquet(gen_dir)
         )
@@ -550,12 +572,7 @@ class HelixSpark:
             df.observe(obs, F.max("ts").alias("max_ts"))
             .repartition(self.options.num_shard, shard_on)
             .write.mode("append")
-            # Parquet bloom filter on the key column: point gets prune row
-            # groups beyond what min/max stats allow (high-cardinality keys
-            # overlap in min/max range but rarely share a bloom) — the free
-            # analog of the reference's declared-but-unused FilterBlocks
-            # (protos/flatbuffer/helix.fbs:53-57).
-            .option("parquet.bloom.filter.enabled#key", "true")
+            .options(**_KEY_BLOOM)
             .partitionBy("time_bucket")
             .parquet(self.layout.hot_path)
         )
@@ -1040,12 +1057,13 @@ class HelixSpark:
         outdate cutoff and probes with no entry are absent from the result.
 
         The plan prunes to the probes' time_bucket partitions, then parquet
-        key min/max stats and bloom filters skip row groups — the SSTable
-        index's job (src/file/sstable.rs), for free. It collects every
-        stored version of the exact probe pairs (at most probes × versions
-        per pair) and the driver picks the last-write-wins winner: the
-        dedup aggregate's max-(seq, time_bucket, value) order, where
-        Python ``bytes`` compare unsigned like Spark binary."""
+        key min/max stats and each file's key dictionary or bloom filter
+        (``_KEY_BLOOM``) skip row groups — the SSTable index's job
+        (src/file/sstable.rs), for free. It collects every stored version
+        of the exact probe pairs (at most probes × versions per pair) and
+        the driver picks the last-write-wins winner: the dedup aggregate's
+        max-(seq, time_bucket, value) order, where Python ``bytes``
+        compare unsigned like Spark binary."""
         self._check_open()
         pairs = self._live_probes(probes)
         if not pairs:

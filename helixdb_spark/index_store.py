@@ -460,18 +460,18 @@ class AnnIndexStore:
         """Append the rows of ``corpus`` missing from the committed index as
         one new segment under the frozen state.
 
-        The kind's frozen tables are read first (they feed the encode);
-        then, unless ``assume_new``, the corpus is anti-joined on the id
+        Unless ``assume_new``, the corpus is first anti-joined on the id
         against the counted table and an empty delta returns the
-        descriptor unchanged (no generation burned). ``encode(desc, fresh,
-        frozen)`` returns the new segment's tables. ``assume_new`` callers
-        promise disjoint batches, so the committed tables are never opened
-        and the emptiness probe job is skipped; a violated promise stages
-        an empty segment or duplicate rows, never corrupts committed ones.
+        descriptor unchanged (no generation burned, no frozen table
+        opened). The kind's frozen tables are read next (they feed the
+        encode); ``encode(desc, fresh, frozen)`` returns the new segment's
+        tables. ``assume_new`` callers promise disjoint batches, so the
+        committed tables are never opened and the emptiness probe job is
+        skipped; a violated promise stages an empty segment or duplicate
+        rows, never corrupts committed ones.
         """
         spec = _KINDS[kind]
         desc = self._descriptor(name, kind)
-        frozen = {t: self._read_table(name, desc, t) for t in spec.frozen}
         fresh = corpus
         if not assume_new:
             id_col = desc["id_col"]
@@ -479,6 +479,7 @@ class AnnIndexStore:
             fresh = corpus.join(committed.select(id_col), id_col, "left_anti")
             if fresh.isEmpty():
                 return desc
+        frozen = {t: self._read_table(name, desc, t) for t in spec.frozen}
         tables = encode(desc, fresh, frozen)
         gen = self._reserve_gen()
         n_new = self._stage_segment(name, kind, tables, gen)

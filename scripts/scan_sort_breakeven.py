@@ -14,8 +14,10 @@ driver's collect.
 
     SPARK_GRAFT_CPUS=4 python3 scripts/scan_sort_breakeven.py --work /tmp/be
 
-One JSON line per (buckets, key fraction): touched MiB, the two medians and
-how many pairs the one-task sort won.
+One JSON line per (buckets, key fraction): touched MiB, the entries the
+scan keeps (buckets x ``--rick-range`` x kept keys), the on-disk bytes per
+stored entry, the two medians and how many pairs the one-task sort won.
+Sizes below one bucket come from fewer keys, e.g. ``--keys 100``.
 """
 
 from __future__ import annotations
@@ -69,9 +71,9 @@ def main() -> None:
     db.compact(0, B * R - 1)
     saved = engine.SCAN_ONE_TASK_SORT_BYTES
 
-    def touched_mib(n_buckets: int) -> float:
+    def touched_bytes(n_buckets: int) -> int:
         plan = db.scan((0, n_buckets * R - 1))._jdf.queryExecution().sparkPlan()
-        return engine._file_bytes(plan) / 2**20
+        return engine._file_bytes(plan)
 
     def timed(n_buckets: int, key_range, one_task: bool) -> float:
         engine.SCAN_ONE_TASK_SORT_BYTES = 1 << 62 if one_task else -1
@@ -82,6 +84,7 @@ def main() -> None:
 
     try:
         for n in range(1, B + 1):
+            touched = touched_bytes(n)
             for frac, key_range in ((1, None), (16, (le_u64(0), le_u64(K // 16 - 1)))):
                 timed(n, key_range, True), timed(n, key_range, False)
                 one, rng = [], []
@@ -92,7 +95,9 @@ def main() -> None:
                 print(json.dumps({
                     "buckets": n,
                     "key_fraction": f"1/{frac}",
-                    "touched_mib": round(touched_mib(n), 2),
+                    "touched_mib": round(touched / 2**20, 2),
+                    "entries_kept": n * R * (K // frac),
+                    "bytes_per_entry": round(touched / (n * R * K), 2),
                     "one_task_s": round(statistics.median(one), 3),
                     "range_sort_s": round(statistics.median(rng), 3),
                     "one_task_won": f"{sum(a < b for a, b in zip(one, rng))}/{args.pairs}",

@@ -40,9 +40,9 @@ JOBS = {
     #          write  append  nothing  assume_new  compact
     "pq": (3, 7, 3, None, 2),
     "lsh": (3, 8, 3, 3, 3),
-    "ivf": (6, 11, 4, 6, 5),
+    "ivf": (6, 11, 3, 6, 5),
     "minhash": (4, 11, 3, 6, 4),
-    "ivfpq": (9, 12, 4, None, 5),
+    "ivfpq": (9, 12, 3, None, 5),
 }
 
 

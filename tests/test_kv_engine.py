@@ -939,6 +939,54 @@ def test_write_job_counts(spark, db_path):
     assert db.get(3, b"r3") == b"x3" and db.get(3, b"k3") is None  # replaced
 
 
+def _parquet_sizes(path):
+    import glob
+    import os
+
+    return [
+        os.path.getsize(f)
+        for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
+    ]
+
+
+def _scanned_rows(plan):
+    """Rows the parquet leaves of an executed ``plan`` handed up: row
+    groups a key filter skipped are never read."""
+    total = 0
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            total += leaf.metrics().apply("numOutputRows").value()
+    return total
+
+
+def test_key_bloom_sized_by_data(spark, db_path):
+    """Key bloom filters are sized to each file's distinct keys, not
+    written at the 1 MiB maximum into every file: hot files, cold files
+    and a restored export stay a few KiB, and a single-key get over a
+    multi-file cold bucket still skips the files whose filter rules the
+    key out."""
+    db = HelixSpark.open(spark, db_path, OPTS10)
+    rows = [(i % 20, b"key%04d" % i, b"v%d" % i) for i in range(300)]
+    db.put(rows)
+    assert max(_parquet_sizes(db.layout.hot_path)) < 64 << 10
+    _compact_small_files(spark, db, 0, 19)  # 8 files of distinct keys a bucket
+    cold = _parquet_sizes(db.layout.cold_path)
+    assert len(cold) > 2 and max(cold) < 64 << 10
+
+    ts, key, value = rows[123]
+    probe = db._point_df(db._live_probes([(ts, key)]))
+    assert [bytes(r["value"]) for r in probe.collect()] == [value]
+    bucket_rows = sum(1 for t, _, _ in rows if t // 10 == ts // 10)
+    assert 0 < _scanned_rows(probe._jdf.queryExecution().executedPlan()) < bucket_rows
+
+    dst = HelixSpark.open(spark, db_path + "_restored", OPTS10)
+    dst.restore_chunks(db.scan_raw())
+    assert sum(_parquet_sizes(dst.layout.cold_path)) < 64 << 10
+    assert dst.get(ts, key) == value
+
+
 def test_tie_break_parity_across_reads(spark, db_path):
     """Two writes of one (ts, key) inside one put share a seq; every read
     path breaks the tie on unsigned value bytes (0x80 beats 0x7f), and a
