@@ -445,9 +445,20 @@ class HelixSpark:
         )
         produced = self._fs.list_buckets(gen_dir)
         if not produced:
-            self._fs.delete(gen_dir)
+            self._discard_cold(gen)
             return None
         return gen, produced, bool(obs.get["blobs"])
+
+    def _discard_cold(self, gen: int) -> None:
+        """Drop an uncommitted staged generation and CAS-release its
+        reserved number, so ``cold_gen_seq`` again ends at the last commit
+        and ``rollback_compaction`` can still undo that commit. A crash
+        before the release only burns the number, as any crashed writer
+        does; ``vacuum()`` collects a dir the delete missed."""
+        self._fs.delete(self.layout.cold_gen_path(gen))
+        if int(self._state.get("cold_gen_seq", 0)) == gen + 1:
+            self._state["cold_gen_seq"] = gen
+            self._save_state()
 
     def _commit_cold(
         self,
@@ -1365,20 +1376,29 @@ class HelixSpark:
         unreachable — SURVEY.md §2.10 caveat). Commits write-new-then-flip
         (:meth:`_commit_cold`); the hot partitions the range fully covers
         are its GC.
+
+        Two Spark jobs (the group-by's shuffle-map job and the write) and
+        no emptiness probe: a range with no hot bucket dir returns after a
+        driver listing, and a range whose hot buckets hold no row in it is
+        found by a row count observed on the write, whose staged
+        generation is then discarded uncommitted.
         """
         self._check_open()
-        hot = self._hot_df()
+        b_lo, b_hi = self.layout.bucket_of(start_ts), self.layout.bucket_of(end_ts)
+        if not any(
+            b_lo <= b <= b_hi for b in self._fs.list_buckets(self.layout.hot_path)
+        ):
+            return
+        hot = self._read_tier(self.layout.hot_path, HOT_SCHEMA)
         if hot is None:
             return
-        b_lo, b_hi = self.layout.bucket_of(start_ts), self.layout.bucket_of(end_ts)
+        hot_rows = Observation()
         src = hot.where(
             (F.col("time_bucket") >= b_lo)
             & (F.col("time_bucket") <= b_hi)
             & (F.col("ts") >= start_ts)
             & (F.col("ts") <= end_ts)
-        )
-        if src.isEmpty():
-            return
+        ).observe(hot_rows, F.count(F.lit(1)).alias("n"))
 
         # A re-compaction (the late-data path) REPLACES the affected cold
         # bucket partitions below, so the previously compacted rows of those
@@ -1397,7 +1417,11 @@ class HelixSpark:
                 )
             )
         staged = self._stage_cold(self._encode_chunks(src))
-        if staged is None:  # defensive: src was non-empty, so this can't fire
+        if staged is None:
+            return
+        if not hot_rows.get["n"]:
+            # only cold rows were restaged: nothing moves, so nothing commits
+            self._discard_cold(staged[0])
             return
         full_lo = start_ts // self.layout.rick_range
         if start_ts % self.layout.rick_range:

@@ -70,6 +70,7 @@ from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from helixdb_spark.fsio import EngineFS
 from helixdb_spark.operators import similarity as sim
@@ -245,28 +246,44 @@ class AnnIndexStore:
         return [int(s) for s in desc["segments"]]
 
     def _local_df(self, rows, schema: str) -> DataFrame:
-        """Driver-sized result relation with ONE partition.
-        ``createDataFrame(list)`` slices even a 1-row list across
-        defaultParallelism Python-backed partitions; any single-task
-        consumer (``coalesce(1)``, ``first()``'s take-ladder) then
-        evaluates those partitions SEQUENTIALLY through the Python
-        worker — measured ~5 s for ONE row at local[32] (r12).
-        ``parallelize(rows, 1)`` keeps it one partition: one job, one
-        worker pass, ~0.2 s."""
-        return self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), schema
-        )
+        """Driver-computed result rows as an Arrow-backed LocalRelation:
+        ``collect()`` and ``first()`` over it run no Spark job (the
+        ``parallelize`` relation it replaces cost 1 and 2). The rows go
+        through a ``pyarrow.Table`` typed by the DDL ``schema``, not
+        pandas, so a long column holding a None stays a nullable long
+        (pandas would turn it into float64) and longs past 2^53 and
+        doubles arrive exactly."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _read_table(self, name: str, desc: dict, table: str) -> DataFrame:
+        struct = T.DataType.fromDDL(schema)
+        arrow = to_arrow_schema(struct)
+        table = pa.Table.from_pylist(
+            [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+        )
+        return self.spark.createDataFrame(table, struct)
+
+    def _read_table(
+        self, name: str, desc: dict, table: str, keep_seg: bool = False
+    ) -> DataFrame:
         """One scan of the table root filtered to the COMMITTED segments —
         ``seg IN (...)`` resolves to partition pruning, so superseded or
         in-flight segments are never opened, and a probe-side partition
         filter (``_bucket`` / ``centroid_id``) prunes within the same scan
-        node."""
-        df = self.spark.read.parquet(self._table_root(name, table))
-        return df.where(
+        node. The schema the write recorded in the descriptor (``schemas``,
+        one DDL string a table) is passed to the reader, so opening it runs no
+        schema-inference job; the partition column then keeps its staged
+        type (``centroid_id`` long, where directory inference gives int). A
+        descriptor without ``schemas`` reads by inference. ``keep_seg``
+        keeps the ``seg`` column for per-segment statistics."""
+        reader = self.spark.read
+        schema = desc.get("schemas", {}).get(table)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(self._table_root(name, table)).where(
             F.col("seg").isin(self._segments(desc))
-        ).drop("seg")
+        )
+        return df if keep_seg else df.drop("seg")
 
     def _read(self, name: str, kind: str) -> tuple:
         """(descriptor, *committed tables in spec order) of one index."""
@@ -389,13 +406,14 @@ class AnnIndexStore:
         write job itself, so the descriptor records what the write landed).
         ``count=False`` skips the count observation for tables whose row
         count the descriptor does not record (the bands table — its
-        sibling shingles count is the bookkept one); a micro-batch append
-        is fixed-job-latency-bound, so every skipped job matters."""
+        sibling shingles count is the bookkept one). An unpartitioned
+        stage is one job; a partitioned one is two under AQE, the
+        ``repartition(partition_by)`` shuffle-map job plus the write."""
         path = self._seg_path(name, table, gen)
         if count:
-            # the row count rides the write job as an Observation metric
-            # (r12) instead of a count-back read of the written files —
-            # every staged table costs ONE job, and micro-batch appends are
+            # the row count rides the write as an Observation metric (r12)
+            # instead of a count-back read of the written files, which
+            # would be one more job; micro-batch appends are
             # fixed-job-latency-bound. A zero-row staged batch still
             # observes 0 cleanly (the empty segment must stage so drift
             # monitoring can show the stalled append).
@@ -441,12 +459,15 @@ class AnnIndexStore:
     ) -> dict:
         """Commit a fresh one-segment index: reserve a generation, stage
         every table of ``kind``, then flip the descriptor (``params`` is the
-        kind's fitted, driver-sized state)."""
+        kind's fitted, driver-sized state). The descriptor records each
+        table's schema (``schemas``), which appends and folds carry
+        forward, so ``_read_table`` never infers one."""
         gen = self._reserve_gen()
         n_rows = self._stage_segment(name, kind, tables, gen)
         desc = {
             "kind": kind, "gen": gen, "segments": [gen], **params,
             "n_rows": n_rows, "fingerprint": fingerprint,
+            "schemas": {t: df._jdf.schema().toDDL() for t, df in tables.items()},
         }
         prior = {} if _KINDS[kind].list_counts else None
         self._record_list_counts(desc, name, gen, n_rows, prior)
@@ -519,13 +540,13 @@ class AnnIndexStore:
     ) -> None:
         """Set ``desc["list_counts"]`` to ``prior`` plus the per-list row
         counts of the freshly staged lists segment ``gen``, read from the
-        segment's parquet footers (count over the partition column opens
-        no data pages — ~one tiny task per file). This one cheap job at
-        write time buys every later drift check (``ivf_share_drift*``) its
-        zero-scan metadata path. No counts are kept when ``prior`` is None
-        (the index keeps none) or the segment has more than
-        ``LIST_COUNT_META_CAP`` lists (keeps the descriptor driver-sized;
-        drift then falls back to the scan path)."""
+        segment's parquet footers: on the driver for a local segment dir
+        (no job), else one cheap Spark job (count over the partition
+        column opens no data pages). This buys every later drift check
+        (``ivf_share_drift*``) its zero-scan metadata path. No counts are
+        kept when ``prior`` is None (the index keeps none) or the segment
+        has more than ``LIST_COUNT_META_CAP`` lists (keeps the descriptor
+        driver-sized; drift then falls back to the scan path)."""
         desc.pop("list_counts", None)
         if prior is None:
             return
@@ -535,7 +556,8 @@ class AnnIndexStore:
         cnts = self._local_footer_counts(path) if n_rows else {}
         if cnts is None:
             rows = (
-                self.spark.read.parquet(path)
+                self._read_table(name, desc, "lists", keep_seg=True)
+                .where(F.col("seg") == gen)
                 .groupBy("centroid_id")
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .collect()
@@ -783,10 +805,8 @@ class AnnIndexStore:
         ``assume_new=True`` skips the committed-id anti-join for sources
         whose batches are disjoint by construction (see append_minhash) —
         append cost becomes O(batch) independent of chain length. The
-        committed buckets table is then never even OPENED (descriptor-only
-        read): constructing its DataFrame costs one distributed
-        file-listing job per committed segment — an O(chain) ladder the
-        whole point of assume_new is to avoid."""
+        committed buckets table is then never opened: no anti-join scan
+        and no emptiness-probe job."""
 
         def encode(desc, fresh, _frozen):
             return {"buckets": fresh.withColumn("_bucket", lsh_bucket(
@@ -924,13 +944,11 @@ class AnnIndexStore:
         callers whose batches are disjoint from the committed set BY
         CONSTRUCTION (a streaming source with exactly-once micro-batches,
         a partitioned daily ingest): the committed chain's id column is
-        then never re-scanned per append — nor even FILE-LISTED (the
-        descriptor-only read skips constructing both committed tables,
-        whose listing costs one distributed job per segment) — so append
-        cost is O(batch) regardless of chain length. A violated promise
-        double-counts the re-sent documents' shingles (it never corrupts
-        committed segments); leave False unless the source guarantees
-        disjointness."""
+        then never re-scanned per append and the emptiness-probe job is
+        skipped, so append cost is O(batch) regardless of chain length. A
+        violated promise double-counts the re-sent documents' shingles (it
+        never corrupts committed segments); leave False unless the source
+        guarantees disjointness."""
         caches: list = []
 
         def encode(desc, fresh, _frozen):
@@ -1062,9 +1080,11 @@ class AnnIndexStore:
         ``assume_new=True`` skips the committed-id anti-join for sources
         whose batches are disjoint by construction (see append_minhash) —
         append cost becomes O(batch) independent of chain length; the
-        committed LISTS table is then never opened (descriptor-only read
-        skips its per-segment file-listing jobs — only the small centroids
-        table, which the assignment genuinely needs, is read)."""
+        committed LISTS table is then never opened, so the anti-join scan
+        and its emptiness-probe job are skipped (and, for a descriptor
+        without recorded ``schemas``, the lists table's schema-inference
+        job). Only the small centroids table, which the assignment needs,
+        is read."""
         def encode(desc, fresh, frozen):
             return {"lists": sim.assign_nearest_centroid(
                 fresh, frozen["centroids"], desc["vec_col"], desc["id_col"]
@@ -1195,9 +1215,7 @@ class AnnIndexStore:
 
         desc = self._descriptor(name, "ivf")
         segs = self._segments(desc)
-        lists = self.spark.read.parquet(
-            self._table_root(name, "lists")
-        ).where(F.col("seg").isin(segs))
+        lists = self._read_table(name, desc, "lists", keep_seg=True)
         centroids = self._read_table(name, desc, "centroids")
         idx = F.array(*[F.lit(int(s)) for s in segs])
         cs = F.round(
@@ -1264,7 +1282,7 @@ class AnnIndexStore:
             fit, newest = series[0], series[-1]
             rows = [(fit[1] or 0, *newest[1:])] if newest[0] == last else []
             return self._local_df(rows, schema)
-        series = self._drift_rows_scan(name, segs)
+        series = self._drift_rows_scan(name, desc)
         fit = series.where(F.col("segment_idx") == 0).select(
             F.coalesce("n_rows", F.lit(0).cast("long")).alias("n_fit")
         )
@@ -1291,7 +1309,7 @@ class AnnIndexStore:
         meta = self._list_counts_meta(desc)
         if meta is not None:
             return self._local_df(self._drift_rows_meta(segs, meta), schema)
-        return self._drift_rows_scan(name, segs).orderBy("segment_idx")
+        return self._drift_rows_scan(name, desc).orderBy("segment_idx")
 
     def _drift_rows_meta(self, segs: list, meta: dict) -> list:
         """Zero-JOB drift series (r12): the per-(segment, list) counts
@@ -1323,14 +1341,14 @@ class AnnIndexStore:
             )
         return out_rows
 
-    def _drift_rows_scan(self, name: str, segs: list) -> DataFrame:
+    def _drift_rows_scan(self, name: str, desc: dict) -> DataFrame:
         """The drift series from one map-side-combined scan of the lists
         table's (seg, centroid_id) pairs, unordered."""
-        lists = self.spark.read.parquet(self._table_root(name, "lists"))
+        segs = self._segments(desc)
+        lists = self._read_table(name, desc, "lists", keep_seg=True)
         idx = F.array(*[F.lit(int(s)) for s in segs])
         counts = (
-            lists.where(F.col("seg").isin(segs))
-            .groupBy("seg", "centroid_id")
+            lists.groupBy("seg", "centroid_id")
             .agg(F.count("*").alias("_n"))
             .select(
                 (F.array_position(idx, F.col("seg")) - 1)

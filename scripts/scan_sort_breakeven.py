@@ -14,6 +14,9 @@ driver's collect.
 
     SPARK_GRAFT_CPUS=4 python3 scripts/scan_sort_breakeven.py --work /tmp/be
 
+Each run builds its DB in a new ``db_*`` dir under ``--work`` and removes
+it when done, so runs sharing one ``--work`` never touch each other's files.
+
 One JSON line per (buckets, key fraction): touched MiB, the entries the
 scan keeps (buckets x ``--rick-range`` x kept keys), the on-disk bytes per
 stored entry, the two medians and how many pairs the one-task sort won.
@@ -46,15 +49,15 @@ def le_u64(i: int) -> bytes:
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--work", default=None, help="scratch dir (default: a temp dir)")
+    ap.add_argument("--work", default=None, help="parent of this run's db_* dir (default: a temp dir)")
     ap.add_argument("--buckets", type=int, default=4)
     ap.add_argument("--keys", type=int, default=200)
     ap.add_argument("--rick-range", type=int, default=1000)
     ap.add_argument("--pairs", type=int, default=4)
     args = ap.parse_args()
     work = args.work or tempfile.mkdtemp(prefix="scan_breakeven_")
-    path = os.path.join(work, "db")
-    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(work, exist_ok=True)
+    path = tempfile.mkdtemp(prefix="db_", dir=work)
     R, K, B = args.rick_range, args.keys, args.buckets
 
     spark = get_session("scan_breakeven", extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -106,6 +109,7 @@ def main() -> None:
         engine.SCAN_ONE_TASK_SORT_BYTES = saved
         db.close()
         spark.stop()
+        shutil.rmtree(path, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -1,7 +1,8 @@
 """The index store's segment protocol: Spark jobs per write / append /
-fold / drift call for every index kind, the refusal of a descriptor that
-carries no ``segments`` list, and the drift statistic of a chain whose
-newest segment is empty."""
+fold / drift call for every index kind, reads through the schemas a
+descriptor records, the refusal of a descriptor that carries no
+``segments`` list, and the drift statistic of a chain whose newest
+segment is empty."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from helixdb_spark.index_store import AnnIndexStore
+from helixdb_spark.index_store import _KINDS, AnnIndexStore
 from helixdb_spark.sources import load_table
 
 _GROUPS = itertools.count()
@@ -38,11 +39,11 @@ def _jobs_of(spark, fn):
 # would show as a changed count.
 JOBS = {
     #          write  append  nothing  assume_new  compact
-    "pq": (3, 7, 3, None, 2),
-    "lsh": (3, 8, 3, 3, 3),
-    "ivf": (6, 11, 3, 6, 5),
-    "minhash": (4, 11, 3, 6, 4),
-    "ivfpq": (9, 12, 3, None, 5),
+    "pq": (3, 6, 2, None, 1),
+    "lsh": (3, 7, 2, 3, 2),
+    "ivf": (5, 8, 2, 4, 3),
+    "minhash": (4, 10, 2, 6, 2),
+    "ivfpq": (8, 9, 2, None, 3),
 }
 
 
@@ -73,12 +74,66 @@ def test_index_store_jobs_per_call(spark, sf_dir, tmp_path, kind):
         assert (len(desc["segments"]), desc["n_rows"]) == (4, n_total)
     if kind == "ivf":
         rows, d = _jobs_of(spark, lambda: store.ivf_share_drift("ivf").collect())
-        assert len(rows) == 1 and d == 1
+        assert len(rows) == 1 and d == 0
     folded, c = _jobs_of(spark, lambda: store.compact_index(kind))
     assert len(folded["segments"]) == 1
     assert folded["n_rows"] == desc["n_rows"]
     assert store.list_indexes()[kind]["segments"] == folded["segments"]
     assert (w, a, a0, an, c) == JOBS[kind]
+
+
+def _sorted_rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+@pytest.mark.parametrize("kind", sorted(JOBS))
+def test_read_table_uses_recorded_schema(spark, sf_dir, tmp_path, kind):
+    """After write -> append -> fold, every table opens through the schema
+    its descriptor records, with no Spark job, and reads the same rows and
+    column names as a schema-inferring read of the committed segments. A
+    descriptor without ``schemas`` (written before they were recorded)
+    still reads, by inference."""
+    id_col = "doc_id" if kind == "minhash" else "vec_id"
+    corpus = load_table(
+        spark, sf_dir, "documents" if kind == "minhash" else "embeddings"
+    )
+    store = AnnIndexStore(spark, str(tmp_path / "idx"))
+    getattr(store, f"write_{kind}")(corpus.where(F.col(id_col) % 4 == 0), name=kind)
+    getattr(store, f"append_{kind}")(corpus.where(F.col(id_col) % 4 <= 1), name=kind)
+    desc = store.compact_index(kind)
+    assert sorted(desc["schemas"]) == sorted(_KINDS[kind].tables)
+    legacy = {k: v for k, v in desc.items() if k != "schemas"}
+    for table in _KINDS[kind].tables:
+        df, jobs = _jobs_of(spark, lambda: store._read_table(kind, desc, table))
+        assert jobs == 0
+        inferred = spark.read.parquet(store._table_root(kind, table)).where(
+            F.col("seg").isin(desc["segments"])
+        ).drop("seg")
+        old = store._read_table(kind, legacy, table)
+        assert df.columns == inferred.columns == old.columns
+        rows = _sorted_rows(df)
+        assert rows and rows == _sorted_rows(inferred) == _sorted_rows(old)
+
+
+def test_share_drift_first_runs_no_job(spark, tmp_path):
+    """The drift row of a one-segment chain, of a chain on the descriptor
+    metadata path, and of a chain whose newest segment is empty is
+    computed on the driver, and ``first()`` over it launches no Spark
+    job."""
+    store = AnnIndexStore(spark, str(tmp_path / "idx"))
+    rows = []
+    for step in (
+        lambda: store.write_ivf(_emb(spark, 0, 200), name="ivf", stride=50),
+        lambda: store.append_ivf(_emb(spark, 200, 300), name="ivf", assume_new=True),
+        lambda: store.append_ivf(_emb(spark, 0, 0), name="ivf", assume_new=True),
+    ):
+        step()
+        row, jobs = _jobs_of(spark, lambda: store.ivf_share_drift("ivf").first())
+        assert jobs == 0
+        rows.append(tuple(row))
+    assert rows[0] == (200, 0, 0.0)
+    assert rows[1][:2] == (200, 100) and rows[1][2] > 0
+    assert rows[2] == (200, 0, 0.0)
 
 
 def test_segmentless_descriptor_is_refused(spark, tmp_path):

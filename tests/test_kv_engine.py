@@ -11,6 +11,7 @@
 from __future__ import annotations
 
 import itertools
+import json
 import struct
 
 import pytest
@@ -915,16 +916,17 @@ def test_point_reads_job_counts_and_answers(spark, db_path, cache_reads):
 
 
 def test_write_job_counts(spark, db_path):
-    """Spark jobs per write call: put 2, compact and re-compact 3,
+    """Spark jobs per write call: put 2, compact and re-compact 2,
     bulk_load 2, a packing optimize 3 and restore_chunks 2. The shared
     cold commit path lists the produced buckets on the driver and observes
-    the blob flag on the write, so it adds no job of its own."""
+    the blob flag on the write, so it adds no job of its own; compact
+    observes its hot-row count on the write instead of probing first."""
     db = HelixSpark.open(spark, db_path, OPTS10)
     rows = [(t, b"k%d" % t, b"v%d" % t) for t in range(40)]
     assert _jobs_of(spark, lambda: db.put(rows))[1] == 2
-    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 3
+    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 2
     db.put([(3, b"k3", b"late")])
-    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 3
+    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 2
     bulk = [(t, b"b%d" % t, b"bulk") for t in range(100, 120)]
     assert _jobs_of(spark, lambda: db.bulk_load(bulk))[1] == 2
     db.put(rows[20:30])
@@ -937,6 +939,48 @@ def test_write_job_counts(spark, db_path):
     src.compact(0, 19)
     assert _jobs_of(spark, lambda: db.restore_chunks(src.scan_raw()))[1] == 2
     assert db.get(3, b"r3") == b"x3" and db.get(3, b"k3") is None  # replaced
+
+
+def test_compact_without_hot_bucket_runs_no_job(spark, db_path):
+    """A compaction range with no hot bucket dir returns after the driver
+    listing: no Spark job, and the state (manifest, generation counter,
+    history) and the files are unchanged."""
+    import os
+
+    db = HelixSpark.open(spark, db_path, OPTS10)
+    db.put([(t, b"k%d" % t, b"v") for t in range(20, 30)])
+    db.compact(20, 24)
+    state = json.loads(json.dumps(db._state))
+    files = sorted(os.path.join(r, f) for r, _, fs in os.walk(db_path) for f in fs)
+    assert _jobs_of(spark, lambda: db.compact(0, 19))[1] == 0
+    assert db._state == state
+    assert sorted(
+        os.path.join(r, f) for r, _, fs in os.walk(db_path) for f in fs
+    ) == files
+    db.close()
+
+
+def test_compact_of_rowless_hot_range_commits_nothing(spark, db_path):
+    """Hot buckets in the range hold no row inside [start_ts, end_ts] while
+    cold data of the range does: the compaction commits nothing, leaves no
+    staged generation dir, and ``rollback_compaction`` still undoes the
+    previous commit."""
+    import os
+
+    db = HelixSpark.open(
+        spark,
+        db_path,
+        HelixOptions(rick_range=10, auto_maintain=False, keep_generations=2),
+    )
+    db.put([(t, b"k%d" % t, b"v") for t in (*range(10), *range(15, 20))])
+    db.compact(0, 12)  # bucket 0 goes cold; hot bucket 1 keeps 15..19
+    state = json.loads(json.dumps(db._state))
+    db.compact(5, 12)
+    assert db._state == state
+    assert sorted(os.listdir(db.layout.cold_path)) == ["gen=0"]
+    assert db.rollback_compaction()
+    assert db.scan((0, 19)).count() == 15 and not db._state["cold_manifest"]
+    db.close()
 
 
 def _parquet_sizes(path):
