@@ -1378,16 +1378,20 @@ class HelixSpark:
         are its GC.
 
         Two Spark jobs (the group-by's shuffle-map job and the write) and
-        no emptiness probe: a range with no hot bucket dir returns after a
-        driver listing, and a range whose hot buckets hold no row in it is
-        found by a row count observed on the write, whose staged
-        generation is then discarded uncommitted.
+        no emptiness probe. A range returns with no job when the driver
+        listing finds no hot bucket dir in it, or when the ``ts`` footer
+        statistics of its hot files all miss it; a range whose hot files
+        span it without holding a row in it is found by a row count
+        observed on the write, whose staged generation is then discarded
+        uncommitted.
         """
         self._check_open()
         b_lo, b_hi = self.layout.bucket_of(start_ts), self.layout.bucket_of(end_ts)
-        if not any(
-            b_lo <= b <= b_hi for b in self._fs.list_buckets(self.layout.hot_path)
-        ):
+        buckets = [
+            b for b in self._fs.list_buckets(self.layout.hot_path)
+            if b_lo <= b <= b_hi
+        ]
+        if not buckets or self._hot_footers_miss(buckets, start_ts, end_ts):
             return
         hot = self._read_tier(self.layout.hot_path, HOT_SCHEMA)
         if hot is None:
@@ -1429,6 +1433,41 @@ class HelixSpark:
         full_hi = (end_ts + 1) // self.layout.rick_range - 1
         self._commit_cold(*staged, hot_dropped=range(full_lo, full_hi + 1))
         self._refresh_indexes(bounds=(start_ts, end_ts))
+
+    def _hot_footers_miss(
+        self, buckets: list[int], start_ts: int, end_ts: int
+    ) -> bool:
+        """True when the parquet footers of the hot files in ``buckets``
+        prove no row has ``ts`` in [start_ts, end_ts]: every row group's
+        ``ts`` min/max lies outside it. Read on the driver (pyarrow opens
+        only the footers), so no Spark job runs. A remote store, a row
+        group without ``ts`` statistics or an unreadable footer answers
+        False, and the row count observed on the compaction's write
+        decides instead."""
+        if self._fs.remote:
+            return False
+        try:
+            import pyarrow.parquet as pq
+
+            for b in buckets:
+                d = f"{self.layout.hot_path}/time_bucket={b}"
+                for f in os.scandir(d):
+                    if not (f.is_file() and f.name.endswith(".parquet")):
+                        continue
+                    md = pq.read_metadata(f.path)
+                    col = md.schema.names.index("ts")
+                    for i in range(md.num_row_groups):
+                        rg = md.row_group(i)
+                        if rg.num_rows == 0:
+                            continue
+                        st = rg.column(col).statistics
+                        if st is None or not st.has_min_max:
+                            return False
+                        if st.min <= end_ts and st.max >= start_ts:
+                            return False
+            return True
+        except (ImportError, ValueError, OSError):
+            return False
 
     def _encode_chunks(self, src: DataFrame) -> DataFrame:
         """Cold rows ``(key, codec, chunk, blob, time_bucket)`` from stored

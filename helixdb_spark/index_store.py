@@ -275,15 +275,28 @@ class AnnIndexStore:
         schema-inference job; the partition column then keeps its staged
         type (``centroid_id`` long, where directory inference gives int). A
         descriptor without ``schemas`` reads by inference. ``keep_seg``
-        keeps the ``seg`` column for per-segment statistics."""
-        reader = self.spark.read
-        schema = desc.get("schemas", {}).get(table)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(self._table_root(name, table)).where(
-            F.col("seg").isin(self._segments(desc))
-        )
+        keeps the ``seg`` column for per-segment statistics.
+
+        A frozen table (the IVF centroids) is fit-time state that every
+        consumer broadcasts whole, so it is read as one partition: the
+        centroid assignment's 1-row ``collect_list`` then needs no
+        ``Exchange SinglePartition`` job ahead of its broadcast (its
+        tie-break does not depend on list order), and the one task reads
+        no more than that broadcast carries."""
+        df = self._reader(desc, table).parquet(
+            self._table_root(name, table)
+        ).where(F.col("seg").isin(self._segments(desc)))
+        if table in _KINDS[desc["kind"]].frozen:
+            df = df.coalesce(1)
         return df if keep_seg else df.drop("seg")
+
+    def _reader(self, desc: dict, table: str):
+        """A parquet reader carrying the schema ``desc`` records for
+        ``table``, or an inferring one for a descriptor without
+        ``schemas``."""
+        schema = desc.get("schemas", {}).get(table)
+        reader = self.spark.read
+        return reader if schema is None else reader.schema(schema)
 
     def _read(self, name: str, kind: str) -> tuple:
         """(descriptor, *committed tables in spec order) of one index."""
@@ -541,8 +554,10 @@ class AnnIndexStore:
         """Set ``desc["list_counts"]`` to ``prior`` plus the per-list row
         counts of the freshly staged lists segment ``gen``, read from the
         segment's parquet footers: on the driver for a local segment dir
-        (no job), else one cheap Spark job (count over the partition
-        column opens no data pages). This buys every later drift check
+        (no job), else a count over that one segment dir, read through the
+        recorded schema (two jobs, the count's shuffle-map job and its
+        result; a count over the partition column opens no data pages).
+        This buys every later drift check
         (``ivf_share_drift*``) its zero-scan metadata path. No counts are
         kept when ``prior`` is None (the index keeps none) or the segment
         has more than ``LIST_COUNT_META_CAP`` lists (keeps the descriptor
@@ -556,8 +571,8 @@ class AnnIndexStore:
         cnts = self._local_footer_counts(path) if n_rows else {}
         if cnts is None:
             rows = (
-                self._read_table(name, desc, "lists", keep_seg=True)
-                .where(F.col("seg") == gen)
+                self._reader(desc, "lists")
+                .parquet(path)
                 .groupBy("centroid_id")
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .collect()

@@ -415,11 +415,8 @@ def assign_nearest_centroids(
     Tie-break is identical to the window's (csim DESC, centroid_id ASC):
     struct comparison on (csim, -centroid_id) picks the same winner, and a
     null csim (zero-norm vector) loses to any non-null exactly as the
-    window's DESC NULLS LAST ranking did. The struct comparison does not
-    depend on list order, so the aggregate runs over ``coalesce(1)``: one
-    task builds the 1-row list with no ``Exchange SinglePartition`` (and
-    no shuffle-map job) ahead of the broadcast."""
-    cents = centroids.coalesce(1).agg(
+    window's DESC NULLS LAST ranking did."""
+    cents = centroids.agg(
         F.collect_list(F.struct("centroid_id", "_cvec")).alias("_cents")
     )
     joined = df.join(F.broadcast(cents))

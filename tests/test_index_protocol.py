@@ -41,9 +41,9 @@ JOBS = {
     #          write  append  nothing  assume_new  compact
     "pq": (3, 6, 2, None, 1),
     "lsh": (3, 7, 2, 3, 2),
-    "ivf": (5, 8, 2, 4, 3),
+    "ivf": (6, 8, 2, 4, 3),
     "minhash": (4, 10, 2, 6, 2),
-    "ivfpq": (8, 9, 2, None, 3),
+    "ivfpq": (9, 9, 2, None, 3),
 }
 
 
@@ -134,6 +134,30 @@ def test_share_drift_first_runs_no_job(spark, tmp_path):
     assert rows[0] == (200, 0, 0.0)
     assert rows[1][:2] == (200, 100) and rows[1][2] > 0
     assert rows[2] == (200, 0, 0.0)
+
+
+def test_list_counts_without_local_footers(spark, tmp_path, monkeypatch):
+    """Where the driver cannot read a staged lists segment's footers (an
+    object store), its per-list counts come from a count over that segment
+    dir read through the recorded schema: the count's shuffle-map job and
+    its result, no schema-inference job. They equal the driver-read
+    counts."""
+    def build(root):
+        store = AnnIndexStore(spark, str(tmp_path / root))
+        store.write_ivf(_emb(spark, 0, 200), name="ivf", stride=50)
+        appended, jobs = _jobs_of(
+            spark, lambda: store.append_ivf(_emb(spark, 200, 300), name="ivf",
+                                            assume_new=True),
+        )
+        return appended["list_counts"], jobs
+
+    local, local_jobs = build("local")
+    monkeypatch.setattr(
+        AnnIndexStore, "_local_footer_counts", staticmethod(lambda path: None)
+    )
+    remote, remote_jobs = build("remote")
+    assert remote == local and len(local) == 2
+    assert remote_jobs == local_jobs + 2
 
 
 def test_segmentless_descriptor_is_refused(spark, tmp_path):

@@ -964,7 +964,9 @@ def test_compact_of_rowless_hot_range_commits_nothing(spark, db_path):
     """Hot buckets in the range hold no row inside [start_ts, end_ts] while
     cold data of the range does: the compaction commits nothing, leaves no
     staged generation dir, and ``rollback_compaction`` still undoes the
-    previous commit."""
+    previous commit. When the hot files' ``ts`` footer statistics miss the
+    range it runs no Spark job and writes no byte; when a hot file spans
+    the range without a row in it, the staged generation is discarded."""
     import os
 
     db = HelixSpark.open(
@@ -975,11 +977,27 @@ def test_compact_of_rowless_hot_range_commits_nothing(spark, db_path):
     db.put([(t, b"k%d" % t, b"v") for t in (*range(10), *range(15, 20))])
     db.compact(0, 12)  # bucket 0 goes cold; hot bucket 1 keeps 15..19
     state = json.loads(json.dumps(db._state))
-    db.compact(5, 12)
+    files = sorted(os.path.join(r, f) for r, _, fs in os.walk(db_path) for f in fs)
+    assert _jobs_of(spark, lambda: db.compact(5, 12))[1] == 0
     assert db._state == state
-    assert sorted(os.listdir(db.layout.cold_path)) == ["gen=0"]
+    assert sorted(
+        os.path.join(r, f) for r, _, fs in os.walk(db_path) for f in fs
+    ) == files
     assert db.rollback_compaction()
     assert db.scan((0, 19)).count() == 15 and not db._state["cold_manifest"]
+
+    # one key, so ts 11 and 18 share one hot file whose ts min/max spans
+    # [13, 14] without a row in it; the compaction of [11, 11] puts cold
+    # data in bucket 1
+    db.put([(11, b"s", b"v"), (18, b"s", b"v")])
+    db.compact(11, 11)
+    state = json.loads(json.dumps(db._state))
+    cold = sorted(os.listdir(db.layout.cold_path))
+    assert _jobs_of(spark, lambda: db.compact(13, 14))[1] == 2  # staged
+    assert db._state == state
+    assert sorted(os.listdir(db.layout.cold_path)) == cold
+    assert db.rollback_compaction()
+    assert db.scan((0, 19)).count() == 17
     db.close()
 
 
